@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 
 from pg_logical_replication_spark.operators.dedup import tokens_expr
 
-BIN_STRIDE = 1_000_000
-
 
 def pack_sequences(
     df: DataFrame,
@@ -43,46 +41,29 @@ def pack_sequences(
     is a JVM-side expression; only the tiny (doc_id, n_tokens) pairs
     enter Python, never the text.
     """
+    # the greedy rule is the streaming operators' fold; imported here,
+    # not at module top, because importing the streaming package imports
+    # the sources package, which imports this module
+    from pg_logical_replication_spark.streaming.folds import (
+        PACK_COLUMNS,
+        PACK_SCHEMA,
+        pack_fold,
+    )
+
     counted = df.select(
         F.col(id_col).alias("doc_id"),
         F.size(tokens_expr(text_col)).alias("n_tokens"),
         F.expr(f"{id_col} div {bucket_size}").alias("bucket"),
     )
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        out_bin, out_seq = [], []
-        acc = budget + 1  # force a fresh bin on the first doc
-        nbin = -1
-        seq = 0
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            if acc + n > budget:
-                nbin += 1
-                acc = n
-                seq = 0
-            else:
-                acc += n
-                seq += 1
-            out_bin.append(nbin)
-            out_seq.append(seq)
-        if nbin >= BIN_STRIDE:
-            # a bucket_size > BIN_STRIDE of tiny docs would wrap local
-            # bin ids into the next bucket's band — refuse loudly
-            raise ValueError(
-                f"pack_sequences: bucket produced {nbin + 1} bins, "
-                f"exceeding the {BIN_STRIDE} per-bucket id band; lower "
-                "bucket_size"
-            )
-        pdf = pdf.assign(
-            bin_id=pdf["bucket"] * BIN_STRIDE + pd.Series(out_bin, index=pdf.index),
-            bin_seq=out_seq,
-        )
-        return pdf[["doc_id", "n_tokens", "bucket", "bin_id", "bin_seq"]]
+    def _pack(key, pdf):
+        rows = pdf.sort_values("doc_id").to_dict("records")
+        out, _ = pack_fold(key, rows, None, budget)
+        return pd.DataFrame(out, columns=PACK_COLUMNS)
 
     # groupBy().applyInPandas guarantees one pandas frame per bucket; the
     # greedy loop is O(bucket_size) pure-Python over two int columns.
     return counted.groupBy("bucket").applyInPandas(
         _pack,
-        schema="doc_id long, n_tokens int, bucket long, bin_id long, bin_seq int",
+        schema=PACK_SCHEMA,
     )

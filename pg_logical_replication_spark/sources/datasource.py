@@ -43,6 +43,7 @@ offset stays O(1) regardless of history length.
 from __future__ import annotations
 
 import os
+import struct
 from collections.abc import Iterator
 from typing import Tuple
 
@@ -59,9 +60,61 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from pg_logical_replication_spark.model import long_to_lsn
+
 RAW_SCHEMA = "lsn string, seq long, value string, data binary"
 
 _SEQ_SHIFT = 32  # seq = (file_index << 32) | row_in_file
+
+# COPY-both frame sizes of the streaming replication protocol: 'w'
+# XLogData header = tag + walStart + walEnd + sendTime; 'k' keepalive =
+# tag + walEnd + sendTime + replyRequested
+_XLOG_HEADER = 25
+_KEEPALIVE = 18
+
+
+def _frame_lsn(frame: bytes) -> str | None:
+    """The LSN a COPY frame carries ('w' walStart, 'k' walEnd), or None
+    for any other or truncated frame."""
+    tag = frame[:1]
+    if (tag == b"w" and len(frame) >= _XLOG_HEADER) or (
+        tag == b"k" and len(frame) >= _KEEPALIVE
+    ):
+        return long_to_lsn(struct.unpack_from(">Q", frame, 1)[0])
+    return None
+
+
+def _segment_edge(frame: bytes) -> int:
+    """+1 for a pgoutput Stream Start ('S' + xid + first-segment flag),
+    -1 for a Stream Stop ('E'), 0 for any other frame. The exact payload
+    sizes keep other formats' payloads (JSON, text, protobuf) out."""
+    if frame[:1] != b"w":
+        return 0
+    size, tag = len(frame) - _XLOG_HEADER, frame[_XLOG_HEADER:_XLOG_HEADER + 1]
+    if size == 6 and tag == b"S":
+        return 1
+    return -1 if size == 1 and tag == b"E" else 0
+
+
+def _batch_end(frames: list[bytes], limit: int | None) -> int:
+    """How many leading ``frames`` a micro-batch takes: the longest
+    prefix of at most ``limit`` frames that ends outside every streamed
+    segment ('S'…'E') — or, when the first segment alone is longer than
+    ``limit``, the prefix up to its 'E'. 0 while that 'E' is unlogged.
+
+    A batch must not end inside a segment: the next batch would decode
+    the rest of it as non-streamed and read each change's spliced xid
+    as its relation oid."""
+    end, open_ = 0, False
+    for i, frame in enumerate(frames):
+        edge = _segment_edge(frame)
+        if edge:
+            open_ = edge > 0
+        if not open_:
+            if end and limit is not None and i + 1 > limit:
+                break
+            end = i + 1
+    return end
 
 
 def _list_log_files(path: str) -> list[str]:
@@ -97,21 +150,13 @@ def _read_file(path: str, file_index: int) -> Iterator[Tuple]:
     """
     base = file_index << _SEQ_SHIFT
     if path.endswith(".seg"):
-        import struct as _struct
-
-        from pg_logical_replication_spark.model import long_to_lsn
         from pg_logical_replication_spark.sources.transport import _read_frames
 
         with open(path, "rb") as f:
             buf = f.read()
         frames, _pos = _read_frames(buf, 0, None)
         for i, frame in enumerate(frames):
-            lsn = None
-            tag = frame[:1]
-            if tag in (b"w", b"k") and len(frame) >= 9:
-                (v,) = _struct.unpack_from(">Q", frame, 1)
-                lsn = long_to_lsn(v)
-            yield (lsn, base | i, None, frame)
+            yield (_frame_lsn(frame), base | i, None, frame)
     elif path.endswith(".parquet"):
         import pyarrow.parquet as pq
 
@@ -276,6 +321,9 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
       a Standby Status Update ping at the last received LSN (reference
       ``logical-replication-service.ts:165-171`` + ``:254-300``) — the
       respond loop the file mode cannot close.
+    * Batches end outside protocol-2 streamed segments (``_batch_end``):
+      an unterminated segment waits for its 'E', and a segment longer
+      than ``maxFramesPerTrigger`` is taken whole.
     * ``commit(end)`` sends the non-ping status update for the batch's
       last LSN — acknowledge exactly at durable-delivery, Spark's
       checkpoint commit being the reference's auto-ack point. Disable
@@ -302,12 +350,22 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         return {"seg": "", "pos": 0, "frames": 0, "lsn": None}
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        import struct
-
-        from pg_logical_replication_spark.model import long_to_lsn
-
         t = self._transport(start)
         frames = t.poll(self.max_frames)
+        end = _batch_end(frames, self.max_frames)
+        while frames and not end:
+            # one streamed segment longer than maxFramesPerTrigger: read
+            # on to its 'E' rather than return an empty batch
+            more = t.poll(self.max_frames)
+            if not more:
+                break  # unterminated segment: hold it back until its 'E'
+            frames += more
+            end = _batch_end(frames, self.max_frames)
+        if end < len(frames):
+            # re-poll exactly the kept frames so the end offset (segment
+            # position and frame count) describes the trimmed span
+            t = self._transport(start)
+            frames = t.poll(end)
         if not frames:
             # iterator, not list: see PgCdcStreamReader.read
             return iter([]), start
@@ -315,19 +373,12 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         last_lsn = start.get("lsn")
         rows = []
         for frame in frames:
-            tag = frame[:1]
-            lsn = None
-            if tag == b"w" and len(frame) >= 17:
-                (wal_start,) = struct.unpack_from(">Q", frame, 1)
-                lsn = long_to_lsn(wal_start)
-            elif tag == b"k" and len(frame) >= 18:
-                (wal_end,) = struct.unpack_from(">Q", frame, 1)
-                lsn = long_to_lsn(wal_end)
-                if frame[17] and (lsn or last_lsn):
-                    # shouldRespond: answer NOW with a ping status update
-                    t.send_standby_status(lsn or last_lsn, ping=True)
+            lsn = _frame_lsn(frame)
             if lsn:
                 last_lsn = lsn
+                if frame[:1] == b"k" and frame[_KEEPALIVE - 1]:
+                    # shouldRespond: answer NOW with a ping status update
+                    t.send_standby_status(lsn, ping=True)
             rows.append((lsn, seq, None, frame))
             seq += 1
         end = dict(t.position(), frames=seq, lsn=last_lsn)
@@ -338,23 +389,11 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         # log between the two positions (possible precisely because the
         # tail transport is durable; a raw-socket transport re-subscribes
         # from the ack position instead, as PG replays from the slot)
-        import struct
-
-        from pg_logical_replication_spark.model import long_to_lsn
-
         t = self._transport(start)
-        budget = int(end.get("frames", 0)) - int(start.get("frames", 0))
         seq = int(start.get("frames", 0))
-        for frame in t.poll(budget if budget > 0 else 0):
-            tag = frame[:1]
-            lsn = None
-            if tag == b"w" and len(frame) >= 17:
-                (v,) = struct.unpack_from(">Q", frame, 1)
-                lsn = long_to_lsn(v)
-            elif tag == b"k" and len(frame) >= 18:
-                (v,) = struct.unpack_from(">Q", frame, 1)
-                lsn = long_to_lsn(v)
-            yield (lsn, seq, None, frame)
+        budget = int(end.get("frames", 0)) - seq
+        for frame in t.poll(max(budget, 0)):
+            yield (_frame_lsn(frame), seq, None, frame)
             seq += 1
 
     def commit(self, end: dict) -> None:

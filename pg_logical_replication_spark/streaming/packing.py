@@ -3,67 +3,47 @@ document stream.
 
 The batch operator (``operators/packing.py``) packs each doc_id bucket
 greedily in doc_id order. A stream cannot re-sort across micro-batches,
-so the streaming twin packs in ARRIVAL order (sorted by doc_id WITHIN
-each micro-batch) and carries each bucket's open bin across batches in
-``applyInPandasWithState``: state = (next local bin, tokens already in
-it, last seq) — O(1) per bucket, evicted never (buckets are bounded by
-the id space, and an idle bucket holds three longs). When arrival order
-equals doc_id order the stream packs bit-identically to the batch
-operator (agreement test).
+so the streaming operator packs in ARRIVAL order (sorted by doc_id
+WITHIN each micro-batch) and carries each bucket's open bin across
+batches: state = (next local bin, tokens already in it, last seq) —
+O(1) per bucket, evicted never (buckets are bounded by the id space,
+and an idle bucket holds three longs). When arrival order equals doc_id
+order the stream packs bit-identically to the batch operator.
+
+The greedy rule is one fold, ``folds.pack_fold``, shared by the batch
+operator and by both state backends: ``_pack`` is the input projection,
+and the adapter argument picks ``applyInPandasWithState``
+(``pack_sequences_stream``) or ``transformWithStateInPandas``
+(``tws.pack_sequences_tws``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pg_logical_replication_spark.operators.dedup import tokens_expr
-from pg_logical_replication_spark.operators.packing import BIN_STRIDE
+from pg_logical_replication_spark.streaming.folds import (
+    PACK_COLUMNS,
+    PACK_SCHEMA,
+    doc_order,
+    pack_fold,
+)
+from pg_logical_replication_spark.streaming.stateful import aip_value
 
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql.streaming.state import GroupState
 
-
-def _make_pack(budget: int):
-    def _pack(key: tuple, pdfs: Iterator[pd.DataFrame], state: "GroupState"):
-        (bucket,) = key
-        if state.exists:
-            nbin, acc, seq = state.get
-        else:
-            nbin, acc, seq = -1, budget + 1, 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values("doc_id")
-        out_bin, out_seq = [], []
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            if acc + n > budget:
-                nbin += 1
-                acc = n
-                seq = 0
-            else:
-                acc += n
-                seq += 1
-            out_bin.append(nbin)
-            out_seq.append(seq)
-        if nbin >= BIN_STRIDE:
-            raise ValueError(
-                f"pack_sequences_stream: bucket {bucket} exceeded the "
-                f"{BIN_STRIDE} per-bucket bin band"
-            )
-        state.update((int(nbin), int(acc), int(seq)))
-        yield pdf.assign(
-            bin_id=pdf["bucket"] * BIN_STRIDE
-            + pd.Series(out_bin, index=pdf.index),
-            bin_seq=out_seq,
-        )
-
-    return _pack
+def _pack(stream, budget, bucket_size, text_col, id_col, adapter) -> DataFrame:
+    counted = stream.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(tokens_expr(text_col)).cast("int").alias("n_tokens"),
+        F.expr(f"{id_col} div {bucket_size}").alias("bucket"),
+    )
+    return adapter(
+        counted, ["bucket"], partial(pack_fold, budget=budget), PACK_COLUMNS,
+        PACK_SCHEMA, "nbin long, acc long, seq long", order=doc_order,
+    )
 
 
 def pack_sequences_stream(
@@ -73,24 +53,8 @@ def pack_sequences_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Streaming twin of ``pack_sequences``: same greedy rule, same
+    """Streaming form of ``pack_sequences``: same greedy rule, same
     output schema; a bucket's open bin CONTINUES across micro-batches
     (a half-filled training window is not wasted at batch boundaries).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    counted = stream.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokens_expr(text_col)).cast("int").alias("n_tokens"),
-        F.expr(f"{id_col} div {bucket_size}").alias("bucket"),
-    )
-    return counted.groupBy("bucket").applyInPandasWithState(
-        _make_pack(budget),
-        outputStructType=(
-            "doc_id long, n_tokens int, bucket long, bin_id long, "
-            "bin_seq int"
-        ),
-        stateStructType="nbin long, acc long, seq long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _pack(stream, budget, bucket_size, text_col, id_col, aip_value)

@@ -1,21 +1,31 @@
-"""Stateful streaming transaction assembly — commit-gated emission.
+"""Stateful streaming CDC operators — commit gating, TOAST fill and
+chunked-JSON reassembly across micro-batches.
 
 The reference's stream is transactionally framed and **rolled-back
 transactions are never streamed at all** (asserted by the reference's
 pgoutput spec, ``decoder-pgoutput.spec.ts:260-274``) — PostgreSQL only
 decodes committed WAL. When the engine's *input* is a raw message log
 where a transaction's changes may arrive in a different micro-batch than
-its COMMIT (or a crash leaves an unterminated transaction), that
-guarantee has to be re-established engine-side. This operator does it
-with ``applyInPandasWithState``:
+its fate (or a crash leaves an unterminated transaction), that guarantee
+has to be re-established engine-side, with per-key state.
 
-* key = ``xid``; state = the transaction's buffered change rows;
-* DML rows buffer; a ``commit`` row flushes the buffer downstream with
-  ``commit_ts``/commit LSN stamped on every row (wire order preserved
-  via ``lsn_long``/``seq`` sort);
-* a transaction whose commit never arrives times out
-  (``ProcessingTimeTimeout``) and its state is dropped — the streaming
-  equivalent of rollback invisibility.
+Each operator is split into three parts, each written once:
+
+* the **fold** (``streaming/folds.py``) — the per-key semantics as a
+  pure function of (key, rows in wire order, state);
+* the **input projection** (``fold_input`` and ``gate_frames`` here) —
+  the columns and keys the fold sees;
+* a **state adapter** per backend. This module's adapters run on
+  ``applyInPandasWithState``: one opaque value per key, read and
+  rewritten whole every micro-batch (lower per-batch constants).
+  ``streaming/tws.py``'s adapters run the same folds on
+  ``transformWithStateInPandas``, whose ListState buffer appends per
+  batch and is read once, when the fold consumes it.
+
+The operator builders (``_assemble``, ``_gated``, ``_reassemble``,
+``_toast``) take the adapter as an argument, so the two backends agree
+by construction; ``resolve_*_gate`` picks one by the measured crossover
+``TXN_GATE_LISTSTATE_CROSSOVER_ROWS``.
 
 Scale: state per in-flight transaction is bounded by that transaction's
 size; PG's ``logical_decoding_work_mem`` (64 MB default, reference
@@ -27,22 +37,22 @@ everything else running in parallel around it.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
+from functools import partial
 
 import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql.streaming.state import GroupState
-
-# Buffered/emitted event shape (JSON-serialized in state; state schemas
-# cannot hold maps).
-_EVENT_FIELDS = [
-    "op", "lsn", "lsn_long", "seq", "schema", "table", "key", "before", "after",
-]
+from pg_logical_replication_spark.streaming.folds import (
+    FATE_OPS,
+    OUT_COLUMNS,
+    assemble_fold,
+    gate_fold,
+    reassemble_fold,
+    records,
+    toast_fold,
+    wire_order,
+)
 
 TXN_OUTPUT_SCHEMA = (
     "op string, lsn string, lsn_long long, seq long, xid long, "
@@ -50,71 +60,203 @@ TXN_OUTPUT_SCHEMA = (
     "key map<string,string>, before map<string,string>, "
     "after map<string,string>"
 )
+# the TOAST-fill output IS the ChangeEvent shape the txn gate emits —
+# aliased, not restated, so a schema change can't desynchronize them
+TOAST_OUTPUT_SCHEMA = TXN_OUTPUT_SCHEMA
 
-STATE_SCHEMA = "buffered array<string>"
-
-_DML_OPS = ("insert", "update", "delete", "truncate")
-
-
-_OUT_COLUMNS = [
-    "op", "lsn", "lsn_long", "seq", "xid", "commit_ts", "schema", "table",
-    "key", "before", "after",
-]
+_EVENT_COLUMNS = ["op", "lsn", "lsn_long", "xid", "commit_ts", "schema",
+                  "table", "key", "before", "after"]
 
 
-def _make_assemble(timeout_ms: int | None):
-    """Closure over the timeout so executors see the configured value."""
+# ------------------------------------------------- applyInPandasWithState
+def _timeout_conf(timeout_ms: int | None):
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def _assemble(key: tuple, pdfs: Iterator[pd.DataFrame], state: "GroupState"):
-        (xid,) = key
+    if timeout_ms is None:
+        return GroupStateTimeout.NoTimeout
+    return GroupStateTimeout.ProcessingTimeTimeout
+
+
+def aip_buffered(df, keys, fold, columns, output_schema, meta_schema=None,
+                 timeout_ms=None) -> DataFrame:
+    """A buffering fold on ``applyInPandasWithState``: the key's value is
+    (buffer, *meta), rewritten whole each micro-batch. A key silent for
+    ``timeout_ms`` of processing time is dropped unemitted — rollback
+    invisibility for a transaction whose fate never arrives."""
+    state_schema = "buffered array<string>" + (
+        f", {meta_schema}" if meta_schema else ""
+    )
+
+    def fn(key, pdfs, state):
         if state.hasTimedOut:
-            # abandoned (aborted/crashed) txn — rollback invisibility
             state.remove()
             return
-
-        buffered: list[str] = list(state.get[0]) if state.exists else []
-        commit: dict[str, Any] | None = None
-
-        for pdf in pdfs:
-            for row in pdf.to_dict("records"):
-                op = row["op"]
-                if op == "commit":
-                    ts = row.get("commit_ts")
-                    commit = {"commit_ts": None if ts is None or pd.isna(ts) else ts}
-                elif op in _DML_OPS:
-                    ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                    for f in ("lsn_long", "seq"):
-                        v = ev.get(f)
-                        ev[f] = None if v is None or pd.isna(v) else int(v)
-                    # maps can surface as (k, v) pair-lists depending on
-                    # the Arrow→pandas runtime (see _as_dict); normalize
-                    # like the sibling gates so the JSON round-trip
-                    # restores dicts. commit_ts is stamped from the
-                    # commit row at emission — never buffer the
-                    # non-JSON-serializable pre-commit placeholder.
-                    for f in ("key", "before", "after"):
-                        ev[f] = _as_dict(ev.get(f))
-                    ev["commit_ts"] = None
-                    buffered.append(json.dumps(ev))
-                # 'begin' rows only open the frame; nothing to buffer
-
-        if commit is not None:
-            rows = [json.loads(s) for s in buffered]
-            rows.sort(key=lambda r: (r.get("lsn_long") or 0, r.get("seq") or 0))
-            for r in rows:
-                r["xid"] = xid
-                r["commit_ts"] = commit["commit_ts"]
+        buf, meta = (
+            (list(state.get[0]), tuple(state.get[1:]))
+            if state.exists else ([], None)
+        )
+        out, step = fold(key, records(pdfs, wire_order), meta, lambda: buf)
+        if step.meta is None:
             state.remove()
-            if rows:
-                yield pd.DataFrame(rows, columns=_OUT_COLUMNS)
         else:
-            state.update((buffered,))
+            kept = [] if step.clear else buf
+            state.update((kept + list(step.append), *step.meta))
             if timeout_ms is not None:
                 state.setTimeoutDuration(timeout_ms)
+        if out:
+            yield pd.DataFrame(out, columns=columns)
 
-    return _assemble
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=_timeout_conf(timeout_ms),
+    )
 
 
+def aip_value(df, keys, fold, columns, output_schema, state_schema,
+              order=None) -> DataFrame:
+    """A value fold on ``applyInPandasWithState``: the fold's tuple is the
+    key's value, written when it changes."""
+
+    def fn(key, pdfs, state):
+        old = tuple(state.get) if state.exists else None
+        out, new = fold(key, records(pdfs, order), old)
+        if new != old:
+            state.update(new)
+        if out:
+            yield pd.DataFrame(out, columns=columns)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=_timeout_conf(None),
+    )
+
+
+# ------------------------------------------------------ input projections
+def fold_input(events: DataFrame, *extra: Column, seq: Column | None = None) -> DataFrame:
+    """The ChangeEvent columns ``events`` has, ``seq`` as a long, and
+    ``extra``. Input without a ``seq`` column gets ``seq`` (NULL when
+    None)."""
+    if "seq" in events.columns:
+        seq = F.col("seq")
+    return events.select(
+        *[F.col(c) for c in _EVENT_COLUMNS if c in events.columns],
+        (F.lit(None) if seq is None else seq).cast("long").alias("seq"),
+        *extra,
+    )
+
+
+def gate_frames(
+    events: DataFrame, top: Column, ctrl_ops: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Input projection of the streamed/2PC gate on both backends: the
+    streamish predicate, the gate input and the passthrough remainder.
+
+    Returns ``(gate_input, passthrough_rest)``; gate_input carries the
+    key ``g_top`` and ``g_subxid``. The marker names have no leading
+    underscore: the transformWithState Arrow bridge renames
+    leading-underscore columns positionally (``_toast`` arrived as
+    ``'_5'``; found by the round-6 agreement test).
+    """
+    is_ctrl = F.col("op").isin(*ctrl_ops)
+    streamish = (top.isNotNull() | F.col("op").isin(*FATE_OPS)) & ~is_ctrl
+    gate_input = fold_input(
+        events.filter(streamish),
+        F.coalesce(top, F.col("xid")).alias("g_top"),
+        F.col("meta").getItem("subxid").cast("long").alias("g_subxid"),
+    )
+    rest = events.filter(~streamish & ~is_ctrl).select(
+        *[
+            F.col(c) if c in events.columns else F.lit(None).cast("string").alias(c)
+            for c in ["op", "lsn"]
+        ],
+        F.col("lsn_long"),
+        (F.col("seq") if "seq" in events.columns else F.lit(None))
+        .cast("long").alias("seq"),
+        *[F.col(c) for c in _EVENT_COLUMNS[3:]],
+    )
+    return gate_input, rest
+
+
+# ------------------------------------------------------- operator builders
+def _assemble(events: DataFrame, adapter, timeout_ms) -> DataFrame:
+    # seq-less input orders by wal2json's intra-txn meta['pos'] (review
+    # r2 — a NULL seq lost the tiebreaker and emitted arbitrary order)
+    pos = (
+        F.coalesce(F.col("meta").getItem("pos").cast("long"), F.lit(0))
+        if "meta" in events.columns else F.lit(0)
+    )
+    return adapter(
+        fold_input(events, seq=pos), ["xid"], assemble_fold, OUT_COLUMNS,
+        TXN_OUTPUT_SCHEMA, timeout_ms=timeout_ms,
+    )
+
+
+def _gated(events, combined: bool, passthrough: bool, adapter, timeout_ms):
+    """The streamed-only gate (``combined=False``) or the streamed +
+    plain-2PC gate (``combined=True``) on ``adapter``'s backend."""
+    top = F.col("meta").getItem("stream_top_xid").cast("long")
+    ctrl_ops = ["stream_start", "stream_stop"]
+    if combined:
+        top = F.coalesce(top, F.col("meta").getItem("prepared_xid").cast("long"))
+        ctrl_ops += ["begin_prepare", "prepare"]
+    gate_input, rest = gate_frames(events, top, ctrl_ops)
+    gated = adapter(
+        gate_input, ["g_top"],
+        partial(gate_fold, reemit_unmatched_fates=not combined),
+        OUT_COLUMNS, TXN_OUTPUT_SCHEMA,
+        meta_schema="aborted array<long>", timeout_ms=timeout_ms,
+    )
+    return gated.unionByName(rest) if passthrough else gated
+
+
+def _reassemble(raw, value_col, order_col, slot_col, adapter) -> DataFrame:
+    key = slot_col if slot_col is not None else "__slot"
+    df = raw.select(
+        F.col(slot_col) if slot_col is not None else F.lit(0).alias(key),
+        F.col(order_col).cast("long").alias("seq"),
+        F.col(value_col).cast("string").alias("value"),
+    )
+    out = adapter(
+        df, [key], reassemble_fold, ["seq", "value"], "seq long, value string",
+        meta_schema="depth long, start_seq long",
+    )
+    return out.withColumnRenamed("seq", order_col).withColumnRenamed(
+        "value", value_col
+    )
+
+
+def _toast(events, key_columns, adapter) -> DataFrame:
+    # null parts map to an explicit sentinel: concat_ws SKIPS nulls, so
+    # (NULL,'x') and ('x',NULL) would otherwise collide on one state key
+    identity = F.concat_ws(
+        "\x1f",
+        *[
+            F.coalesce(
+                F.col("key").getItem(k), F.col("after").getItem(k), F.lit("\x1e")
+            )
+            for k in key_columns
+        ],
+    )
+    ev = fold_input(
+        events,
+        F.col("meta").getItem("unchanged_toast").alias("t_toast"),
+        identity.alias("t_identity"),
+    )
+    # schema is part of the state key: public.users(id=1) and
+    # audit.users(id=1) must not share a TOAST image
+    return adapter(
+        ev, ["schema", "table", "t_identity"], toast_fold, OUT_COLUMNS,
+        TOAST_OUTPUT_SCHEMA, "img string", order=wire_order,
+    )
+
+
+# --------------------------------------------------------------- public API
 def assemble_transactions_stream(
     events: DataFrame, timeout_ms: int | None = None
 ) -> DataFrame:
@@ -125,7 +267,8 @@ def assemble_transactions_stream(
     Output: DML rows of committed transactions, stamped with xid +
     commit_ts, in commit order within each transaction. Uncommitted
     transactions are withheld (never emitted — rollback invisibility
-    holds regardless of timeout config).
+    holds regardless of timeout config). Input without ``seq`` orders by
+    ``meta['pos']`` (wal2json's intra-transaction position), else 0.
 
     ``timeout_ms`` additionally GARBAGE-COLLECTS abandoned transactions'
     state after that much processing-time silence. Leave it ``None``
@@ -134,64 +277,7 @@ def assemble_transactions_stream(
     so the trigger never terminates. Set it only for continuously
     running queries.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    cols = ["op", "lsn", "lsn_long", "xid", "commit_ts", "schema", "table",
-            "key", "before", "after"]
-    ev = events.select(
-        *[F.col(c) for c in cols if c in events.columns],
-        *(
-            [F.col("seq").cast("long").alias("seq")]
-            if "seq" in events.columns
-            else [F.coalesce(F.col("meta").getItem("pos").cast("long"), F.lit(0)).alias("seq")]
-        ),
-    )
-    return ev.groupBy("xid").applyInPandasWithState(
-        _make_assemble(timeout_ms),
-        outputStructType=TXN_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-
-
-# --------------------------------------- chunked-JSON stream reassembly
-def _make_reassemble():
-    def _reassemble(key: tuple, pdfs: Iterator[pd.DataFrame], state: "GroupState"):
-        import re as _re
-
-        carry, depth, start_seq = (
-            state.get if state.exists else ("", 0, 0)
-        )
-        frags: list[tuple[int, str]] = []
-        for pdf in pdfs:
-            for row in pdf.to_dict("records"):
-                v = row.get("value")
-                if v is None or not str(v).strip():
-                    continue
-                frags.append((int(row["seq"]), str(v)))
-        frags.sort()  # wire order within the micro-batch
-        out: list[tuple[int, str]] = []
-        for seq, val in frags:
-            stripped = _re.sub(r'"[^"\\]*(?:\\.[^"\\]*)*"', "", val)
-            delta = stripped.count("{") - stripped.count("}")
-            if not carry:
-                start_seq = seq
-            carry += val
-            depth += delta
-            if depth == 0:
-                out.append((start_seq, carry))
-                carry, depth = "", 0
-        state.update((carry, depth, start_seq))
-        if out:
-            yield pd.DataFrame(out, columns=["seq", "value"])
-
-    return _reassemble
+    return _assemble(events, aip_buffered, timeout_ms)
 
 
 def reassemble_json_documents_stream(
@@ -200,16 +286,16 @@ def reassemble_json_documents_stream(
     order_col: str = "seq",
     slot_col: str | None = None,
 ) -> DataFrame:
-    """Streaming twin of
+    """Streaming form of
     :func:`~pg_logical_replication_spark.sources.wal2json.reassemble_json_documents`:
     wal2json ``write-in-chunks`` / ``pretty-print`` fragments → one row
     per complete JSON document, with a partial document CARRIED ACROSS
     micro-batches in keyed state until its closing brace arrives.
 
-    State per slot is one pending document (text, brace depth, starting
-    seq) — O(max document size), independent of stream length. Fragments
-    must arrive in ``order_col`` wire order per slot and split only at
-    structural boundaries (never inside a string literal) — the
+    State per slot is one pending document (fragments, brace depth,
+    starting seq) — O(max document size), independent of stream length.
+    Fragments must arrive in ``order_col`` wire order per slot and split
+    only at structural boundaries (never inside a string literal) — the
     plugin's own chunking contract. Emission is append-mode: a document
     row appears in the micro-batch that completes it.
 
@@ -217,134 +303,7 @@ def reassemble_json_documents_stream(
     without it the whole stream is one slot — serial, like the
     transport that produced it.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key = slot_col if slot_col is not None else "__slot"
-    df = raw.select(
-        *( [F.col(slot_col)] if slot_col is not None else [F.lit(0).alias(key)] ),
-        F.col(order_col).cast("long").alias("seq"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    out = df.groupBy(key).applyInPandasWithState(
-        _make_reassemble(),
-        outputStructType="seq long, value string",
-        stateStructType="carry string, depth long, start_seq long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    renames = out.withColumnRenamed("seq", order_col).withColumnRenamed(
-        "value", value_col
-    )
-    return renames
-
-
-# ------------------------------------------- streamed (protocol v2) txns
-STREAM_STATE_SCHEMA = "buffered array<string>, aborted array<long>"
-
-
-def _make_stream_resolve(timeout_ms: int | None, reemit_unmatched_fates: bool = True):
-    def _resolve(key: tuple, pdfs: Iterator[pd.DataFrame], state: "GroupState"):
-        (top_xid,) = key
-        if state.hasTimedOut:
-            state.remove()  # fate never arrived (crash) — withhold
-            return
-
-        if state.exists:
-            buffered = list(state.get[0])
-            aborted = set(state.get[1])
-        else:
-            buffered, aborted = [], set()
-
-        rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            rows.extend(pdf.to_dict("records"))
-        rows.sort(key=lambda r: (
-            0 if r.get("lsn_long") is None or pd.isna(r.get("lsn_long")) else int(r["lsn_long"]),
-            0 if r.get("seq") is None or pd.isna(r.get("seq")) else int(r.get("seq")),
-        ))
-
-        # A key whose ONLY traffic ever is commit_prepared/rollback_
-        # prepared has no buffered state to gate. When this operator is
-        # the streamed-only gate (reemit_unmatched_fates=True), that
-        # means a PLAIN 2PC transaction whose b..P changes took the
-        # passthrough branch — emit the fate rows unchanged so a
-        # downstream prepared-frame gate (e.g. batch resolve_prepared in
-        # a foreachBatch sink) can consume them. When it is the COMBINED
-        # gate (False), nothing downstream wants fates: a state-less
-        # fate is a zero-DML prepared txn or a timeout-GC'd streamed
-        # txn's late fate — swallow it, matching the batch resolvers.
-        if not state.exists and rows and all(
-            r["op"] in ("commit_prepared", "rollback_prepared") for r in rows
-        ):
-            if not reemit_unmatched_fates:
-                return
-            out = []
-            for row in rows:
-                ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                for f in ("lsn_long", "seq"):
-                    v = ev.get(f)
-                    ev[f] = None if v is None or pd.isna(v) else int(v)
-                ev["xid"] = top_xid
-                ts = row.get("commit_ts")
-                ev["commit_ts"] = None if ts is None or pd.isna(ts) else ts
-                ev["key"] = _as_dict(ev.get("key"))
-                ev["before"] = _as_dict(ev.get("before"))
-                ev["after"] = _as_dict(ev.get("after"))
-                out.append(ev)
-            yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-            return
-
-        commit: dict[str, Any] | None = None
-        for row in rows:
-            op = row["op"]
-            if op in ("stream_commit", "commit_prepared"):
-                ts = row.get("commit_ts")
-                commit = {"commit_ts": None if ts is None or pd.isna(ts) else ts}
-            elif op == "rollback_prepared":  # streamed 2PC rolled back
-                if state.exists:
-                    state.remove()
-                return
-            elif op == "stream_prepare":
-                pass  # informational: fate is the later K/r by xid
-            elif op == "stream_abort":
-                sub = row.get("_subxid")
-                sub = None if sub is None or pd.isna(sub) else int(sub)
-                if sub is None or sub == top_xid:  # top-level abort
-                    state.remove()
-                    return
-                aborted.add(sub)
-            elif op in _DML_OPS:
-                ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                for f in ("lsn_long", "seq"):
-                    v = ev.get(f)
-                    ev[f] = None if v is None or pd.isna(v) else int(v)
-                rx = row.get("xid")
-                ev["_rowxid"] = None if rx is None or pd.isna(rx) else int(rx)
-                ev["key"] = _as_dict(ev.get("key"))
-                ev["before"] = _as_dict(ev.get("before"))
-                ev["after"] = _as_dict(ev.get("after"))
-                buffered.append(json.dumps(ev))
-
-        if commit is not None:
-            out = []
-            for s in buffered:
-                ev = json.loads(s)
-                if ev.pop("_rowxid", None) in aborted:
-                    continue
-                ev["xid"] = top_xid
-                ev["commit_ts"] = commit["commit_ts"]
-                out.append(ev)
-            out.sort(key=lambda r: (r.get("lsn_long") or 0, r.get("seq") or 0))
-            state.remove()
-            if out:
-                yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-        else:
-            state.update((buffered, sorted(aborted)))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(timeout_ms)
-
-    return _resolve
+    return _reassemble(raw, value_col, order_col, slot_col, aip_buffered)
 
 
 def resolve_streamed_stream(
@@ -373,15 +332,12 @@ def resolve_streamed_stream(
     stream. ``commit_prepared``/``rollback_prepared`` fates whose key
     has no streamed state (plain 2PC transactions — their b..P changes
     take the passthrough branch) are re-emitted rather than swallowed,
-    so a downstream prepared-frame gate still sees them. State per in-flight streamed txn is bounded by that txn's
-    change volume — the same bound PG's reorderbuffer spills under;
-    keys hash-distribute across executors.
+    so a downstream prepared-frame gate still sees them. State per
+    in-flight streamed txn is bounded by that txn's change volume — the
+    same bound PG's reorderbuffer spills under; keys hash-distribute
+    across executors.
     """
-    from pyspark.sql import functions as F
-
-    top = F.col("meta").getItem("stream_top_xid").cast("long")
-    ctrl_ops = ["stream_start", "stream_stop"]
-    return _gated_stream(events, top, ctrl_ops, timeout_ms, passthrough)
+    return _gated(events, False, passthrough, aip_buffered, timeout_ms)
 
 
 def resolve_transactions_stream(
@@ -398,24 +354,36 @@ def resolve_transactions_stream(
     wire blocks, so the stamp is exact); fates carry their xid natively.
     Fate handling is shared: ``stream_commit``/``commit_prepared``
     flush, ``stream_abort``/``rollback_prepared`` drop, and a fate whose
-    key never buffered anything re-emits (see the fate-only passthrough
-    note in ``_make_stream_resolve``). ``begin_prepare``/``prepare``
-    markers are consumed like stream controls; plain v1 traffic passes
-    through when ``passthrough``.
+    key never buffered anything is swallowed (see the fate-only note in
+    ``folds.gate_fold``). ``begin_prepare``/``prepare`` markers are
+    consumed like stream controls; plain v1 traffic passes through when
+    ``passthrough``.
     """
-    from pyspark.sql import functions as F
-
-    top = F.coalesce(
-        F.col("meta").getItem("stream_top_xid").cast("long"),
-        F.col("meta").getItem("prepared_xid").cast("long"),
-    )
-    ctrl_ops = ["stream_start", "stream_stop", "begin_prepare", "prepare"]
-    return _gated_stream(
-        events, top, ctrl_ops, timeout_ms, passthrough,
-        reemit_unmatched_fates=False,
-    )
+    return _gated(events, True, passthrough, aip_buffered, timeout_ms)
 
 
+def toast_fill_stream(events: DataFrame, key_columns: list[str]) -> DataFrame:
+    """Streaming unchanged-TOAST completion across micro-batches.
+
+    The batch operator (``operators.apply_changes.toast_fill``) fills
+    from prior images *within the DataFrame it is given*; in a live
+    stream the prior image of a key usually committed in an EARLIER
+    micro-batch, so the fill needs per-key state. State = the key's last
+    post-fill row image (one image per key — bounded the way a replica
+    table is); columns to fill come from each row's own
+    ``meta['unchanged_toast']`` marker (pgoutput 'u' kind,
+    reference ``pgoutput-parser.ts:260-261``), so no column list is
+    configured. Explicit SQL NULLs overwrite the stored image and are
+    never themselves overwritten — same contract as the batch operator.
+
+    Scale: grouped on (schema, table, key) — the same partitioning
+    apply-changes uses; state is one row image per live key, the same
+    asymptote as the MOR snapshot itself.
+    """
+    return _toast(events, key_columns, aip_value)
+
+
+# -------------------------------------------------- backend selection
 # Measured aip-vs-tws crossover (SCALE.md round 6, RocksDB store,
 # one txn held open across micro-batches, fate last): 64k buffered rows
 # aip wins (18.5 vs 30.2 s — tws pays per-batch state-server protocol
@@ -452,18 +420,17 @@ def resolve_streamed_gate(
 
     ``backend='aip'`` is the ``applyInPandasWithState`` form (lower
     per-batch constants — wins for OLTP-shaped transactions);
-    ``backend='tws'`` is the ``transformWithStateInPandas`` ListState
-    twin (per-batch APPEND instead of full-buffer rewrite — wins when
-    one transaction buffers ~2×10⁵+ changes, exactly the workloads
+    ``backend='tws'`` is the ``transformWithStateInPandas`` form
+    (per-batch ListState APPEND instead of full-buffer rewrite — wins
+    when one transaction buffers ~2×10⁵+ changes, exactly the workloads
     ``logical_decoding_work_mem`` streaming exists for). ``'auto'``
     picks by ``expected_txn_rows`` (e.g. the workload's
     ``logical_decoding_work_mem`` row estimate) against the MEASURED
     crossover ``TXN_GATE_LISTSTATE_CROSSOVER_ROWS``; with no estimate
-    it stays on aip, the right default for typical OLTP streams. The
-    two backends are contract-identical (agreement-tested on the full
-    scenario matrix in tests/test_tws.py). Note the tws backend needs
-    the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
+    it stays on aip, the right default for typical OLTP streams. Both
+    backends run the same fold (``folds.gate_fold``) over the same
+    input projection. Note the tws backend needs the RocksDB state
+    store provider (``spark.sql.streaming.stateStore.providerClass`` →
     ``...state.RocksDBStateStoreProvider``) — the default HDFS store
     has no column families and fails the query at start."""
     if _pick_gate_backend(backend, expected_txn_rows) == "tws":
@@ -499,190 +466,4 @@ def resolve_transactions_gate(
         )
     return resolve_transactions_stream(
         events, timeout_ms=timeout_ms, passthrough=passthrough
-    )
-
-
-def gate_frames(
-    events: DataFrame, top, ctrl_ops: list[str], prefix: str
-) -> tuple[DataFrame, DataFrame, str]:
-    """Shared scaffolding for BOTH stateful-backend gates (this module's
-    applyInPandasWithState form and streaming/tws.py's
-    transformWithStateInPandas twin): the streamish predicate, the
-    gate-input projection, and the passthrough remainder — one source of
-    truth so the two contractually-agreeing gates cannot drift
-    (round-6 review #6; they already had once, over the tws Arrow
-    bridge's leading-underscore column rename — hence ``prefix``).
-
-    Returns ``(gate_input, passthrough_rest, key_col_name)`` where
-    gate_input carries ``{prefix}top`` / ``{prefix}subxid``.
-    """
-    from pyspark.sql import functions as F
-
-    is_fate = F.col("op").isin(
-        "stream_commit", "stream_abort", "stream_prepare",
-        "commit_prepared", "rollback_prepared",
-    )
-    is_ctrl = F.col("op").isin(*ctrl_ops)
-    streamish = (top.isNotNull() | is_fate) & ~is_ctrl
-
-    cols = ["op", "lsn", "lsn_long", "xid", "commit_ts", "schema", "table",
-            "key", "before", "after"]
-    seq_cols = (
-        [F.col("seq").cast("long").alias("seq")]
-        if "seq" in events.columns
-        else [F.lit(None).cast("long").alias("seq")]
-    )
-    key_col = f"{prefix}top"
-    gate_input = events.filter(streamish).select(
-        *[F.col(c) for c in cols if c in events.columns],
-        *seq_cols,
-        F.coalesce(top, F.col("xid")).alias(key_col),
-        F.col("meta").getItem("subxid").cast("long").alias(f"{prefix}subxid"),
-    )
-    rest = events.filter(~streamish & ~is_ctrl).select(
-        *[
-            F.col(c) if c in events.columns else F.lit(None).cast("string").alias(c)
-            for c in ["op", "lsn"]
-        ],
-        F.col("lsn_long"),
-        *seq_cols,
-        F.col("xid"),
-        F.col("commit_ts"),
-        F.col("schema"),
-        F.col("table"),
-        F.col("key"),
-        F.col("before"),
-        F.col("after"),
-    )
-    return gate_input, rest, key_col
-
-
-def _gated_stream(
-    events: DataFrame,
-    top,
-    ctrl_ops: list[str],
-    timeout_ms: int | None,
-    passthrough: bool,
-    reemit_unmatched_fates: bool = True,
-) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gate_input, rest, key_col = gate_frames(events, top, ctrl_ops, "_")
-    gated = gate_input.groupBy(key_col).applyInPandasWithState(
-        _make_stream_resolve(timeout_ms, reemit_unmatched_fates),
-        outputStructType=TXN_OUTPUT_SCHEMA,
-        stateStructType=STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-    if not passthrough:
-        return gated
-    return gated.unionByName(rest)
-
-
-# --------------------------------------------------------------- TOAST fill
-# the TOAST-fill output IS the ChangeEvent shape the txn gate emits —
-# aliased, not restated, so a schema change can't desynchronize them
-TOAST_OUTPUT_SCHEMA = TXN_OUTPUT_SCHEMA
-_TOAST_OUT_COLS = _OUT_COLUMNS
-
-
-def _as_dict(v):
-    if v is None or isinstance(v, dict):
-        return v
-    try:  # Arrow map columns surface in pandas as a list of (k, v) pairs
-        return dict(v)
-    except (TypeError, ValueError):
-        return None
-
-
-def _make_toast_fill():
-    def _fill(key, pdfs: Iterator[pd.DataFrame], state: "GroupState"):
-        img: dict[str, Any] = json.loads(state.get[0]) if state.exists else {}
-        rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            rows.extend(pdf.to_dict("records"))
-        rows.sort(key=lambda r: (
-            0 if r.get("lsn_long") is None or pd.isna(r.get("lsn_long")) else int(r["lsn_long"]),
-            0 if r.get("seq") is None or pd.isna(r.get("seq")) else int(r.get("seq")),
-        ))
-        out = []
-        for row in rows:
-            after = _as_dict(row.get("after"))
-            if after is not None:
-                toasted = set((row.get("_toast") or "").split(",")) - {""}
-                for c in toasted:
-                    if after.get(c) is None and c in img:
-                        after[c] = img[c]
-                # post-fill image is the next event's prior image; explicit
-                # SQL NULLs (None outside the toast set) overwrite it
-                img.update(after)
-            # map-typed outputs must be dicts for the Arrow conversion
-            row["after"] = after
-            row["key"] = _as_dict(row.get("key"))
-            row["before"] = _as_dict(row.get("before"))
-            out.append({f: row.get(f) for f in _TOAST_OUT_COLS})
-        state.update((json.dumps(img),))
-        if out:
-            yield pd.DataFrame(out, columns=_TOAST_OUT_COLS)
-
-    return _fill
-
-
-def toast_fill_stream(events: DataFrame, key_columns: list[str]) -> DataFrame:
-    """Streaming unchanged-TOAST completion across micro-batches.
-
-    The batch operator (``operators.apply_changes.toast_fill``) fills
-    from prior images *within the DataFrame it is given*; in a live
-    stream the prior image of a key usually committed in an EARLIER
-    micro-batch, so the fill needs per-key state. State = the key's last
-    post-fill row image (one image per key — bounded the way a replica
-    table is); columns to fill come from each row's own
-    ``meta['unchanged_toast']`` marker (pgoutput 'u' kind,
-    reference ``pgoutput-parser.ts:260-261``), so no column list is
-    configured. Explicit SQL NULLs overwrite the stored image and are
-    never themselves overwritten — same contract as the batch operator.
-
-    Scale: grouped on (table, key) — the same partitioning apply-changes
-    uses; state is one row image per live key, the same asymptote as the
-    MOR snapshot itself.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # null parts map to an explicit sentinel: concat_ws SKIPS nulls, so
-    # (NULL,'x') and ('x',NULL) would otherwise collide on one state key
-    identity = F.concat_ws(
-        "\x1f",
-        *[
-            F.coalesce(
-                F.col("key").getItem(k),
-                F.col("after").getItem(k),
-                F.lit("\x1e"),
-            )
-            for k in key_columns
-        ],
-    )
-    ev = events.select(
-        *[F.col(c) for c in _TOAST_OUT_COLS if c in events.columns],
-        *(
-            []
-            if "seq" in events.columns
-            else [F.lit(None).cast("long").alias("seq")]
-        ),
-        F.col("meta").getItem("unchanged_toast").alias("_toast"),
-        identity.alias("_identity"),
-    )
-    # schema is part of the state key: public.users(id=1) and
-    # audit.users(id=1) must not share a TOAST image
-    return ev.groupBy("schema", "table", "_identity").applyInPandasWithState(
-        _make_toast_fill(),
-        outputStructType=TOAST_OUTPUT_SCHEMA,
-        stateStructType="img string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -1,132 +1,58 @@
-"""transformWithStateInPandas twin of the txn-assembly gate (Spark 4).
+"""The stateful operators on Spark 4's ``transformWithStateInPandas``
+(public API, SPARK-49564).
 
-``streaming/stateful.py`` implements commit-gated transaction assembly on
-``applyInPandasWithState``, whose state is one opaque value per key —
-every micro-batch REWRITES the whole buffered array even when it only
-appends. This module is the same operator on Spark 4's
-``transformWithStateInPandas`` (public API, SPARK-49564): buffered rows
-live in a **ListState**, so a long-running transaction's segments append
-incrementally in the RocksDB state store instead of rewriting an
-ever-growing blob — the difference between O(txn) and O(txn²) total
-state I/O for the reference's 500k-row huge-transaction scenario
-(decoder-pgoutput.spec.ts:324-373).
+Every operator here runs a fold from ``streaming/folds.py`` — the same
+function, over the same input projection, that ``streaming/stateful.py``
+runs on ``applyInPandasWithState``. This module contributes only the
+state adapters:
 
-Semantics are identical to ``assemble_transactions_stream`` (begin/
-commit framed v1 traffic, rollback invisibility by state eviction);
-``tests/test_tws.py`` asserts agreement between the two paths.
+* ``tws_buffered`` — a buffering fold's buffer lives in a **ListState**:
+  each micro-batch APPENDS to it and the fold reads it once, when it
+  consumes it (a transaction's fate, a document's closing brace). A
+  long-running transaction therefore costs O(txn) total state I/O in the
+  RocksDB store instead of the O(txn²) of rewriting an ever-growing blob
+  per batch — the difference for the reference's 500k-row
+  huge-transaction scenario (decoder-pgoutput.spec.ts:324-373). The
+  fold's small meta (aborted subxids, brace depth) is a ValueState.
+* ``tws_value`` — a value fold's tuple is one ValueState.
+
+Besides the five operators shared with the applyInPandasWithState
+backend (txn assembly, streamed/2PC gate, TOAST fill, chunked-JSON
+reassembly, sequence packing), five monitors exist only here: near-dup
+band claim, multi-origin conflict, watermark lateness, schema change
+and net change.
 
 Requires the RocksDB state store provider
 (``spark.sql.streaming.stateStore.providerClass`` →
 ``RocksDBStateStoreProvider``) — the caller sets it; local HDFS-backed
 stores don't support column families. Also requires ``google.protobuf``
-(the transformWithState Python runtime speaks protobuf to the JVM);
-:func:`assemble_transactions_tws` raises a clear ImportError when it is
-absent, and ``tests/test_tws.py`` skips — the applyInPandasWithState
-path in ``streaming/stateful.py`` (identical contract, asserted by the
-agreement test where both can run) stays the tested default.
+(the transformWithState Python runtime speaks protobuf to the JVM) or
+the vendored ``_vendor/pbshim`` the package installs when it is absent.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
+from pg_logical_replication_spark.streaming import folds
 from pg_logical_replication_spark.streaming.stateful import (
-    _DML_OPS,
-    _EVENT_FIELDS,
-    _OUT_COLUMNS,
-    TXN_OUTPUT_SCHEMA,
+    _assemble,
+    _gated,
+    _reassemble,
+    _toast,
 )
 
 
-def _txn_assembler_class():
-    """Late import: stateful_processor needs a Spark 4 runtime."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TxnAssembler(StatefulProcessor):
-        def __init__(self, ttl_ms: int | None):
-            self._ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # one JSON-encoded ChangeEvent per list element → appends are
-            # incremental writes, never a rewrite of prior elements
-            self._buf = handle.getListState(
-                "buffered", "ev string", ttlDurationMs=self._ttl_ms
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (xid,) = key
-            fresh: list[tuple[str]] = []
-            commit: dict[str, Any] | None = None
-            for pdf in rows:
-                for row in pdf.to_dict("records"):
-                    op = row["op"]
-                    if op == "commit":
-                        ts = row.get("commit_ts")
-                        commit = {
-                            "commit_ts": None if ts is None or pd.isna(ts) else ts
-                        }
-                    elif op in _DML_OPS:
-                        ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                        for f in ("lsn_long", "seq"):
-                            v = ev.get(f)
-                            ev[f] = None if v is None or pd.isna(v) else int(v)
-                        # same Arrow-runtime normalization as the
-                        # applyInPandasWithState gate (stateful._as_dict)
-                        from pg_logical_replication_spark.streaming.stateful import (
-                            _as_dict,
-                        )
-
-                        for f in ("key", "before", "after"):
-                            ev[f] = _as_dict(ev.get(f))
-                        ev["commit_ts"] = None
-                        fresh.append((json.dumps(ev),))
-
-            if commit is None:
-                if fresh:
-                    self._buf.appendList(fresh)
-                return
-                yield  # pragma: no cover — make this a generator
-
-            out = [json.loads(s) for (s,) in self._buf.get()] if self._buf.exists() else []
-            out.extend(json.loads(s) for (s,) in fresh)
-            out.sort(key=lambda r: (r.get("lsn_long") or 0, r.get("seq") or 0))
-            self._buf.clear()
-            if out:
-                for r in out:
-                    r["xid"] = xid
-                    r["commit_ts"] = commit["commit_ts"]
-                yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-
-        def close(self) -> None:
-            pass
-
-    return TxnAssembler
-
-
-def assemble_transactions_tws(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """Commit-gated txn assembly via transformWithStateInPandas.
-
-    Same contract as ``assemble_transactions_stream``: DML of committed
-    transactions only, stamped with xid + commit_ts, wire-ordered within
-    the transaction; uncommitted/aborted txns never emit. ``ttl_ms``
-    evicts abandoned transactions' state (rollback invisibility GC) —
-    requires ``timeMode='ProcessingTime'``, so leave it ``None`` for
-    drain-and-stop (``availableNow``) runs.
-    """
-    from pyspark.sql import functions as F
-
+def _require_protobuf() -> None:
     try:
         # either the real protobuf package or the vendored mini-runtime
         # (_vendor/pbshim, appended by the package __init__ when the
@@ -136,201 +62,125 @@ def assemble_transactions_tws(
         raise ImportError(
             "transformWithStateInPandas needs the google.protobuf package "
             "(its Python worker speaks protobuf to the JVM state server) "
-            "or the vendored pbshim, which failed to load; "
-            "use streaming.stateful.assemble_transactions_stream instead"
+            "or the vendored pbshim, which failed to load; use the "
+            "applyInPandasWithState operators in streaming.stateful instead"
         ) from exc
 
-    cols = ["op", "lsn", "lsn_long", "xid", "commit_ts", "schema", "table",
-            "key", "before", "after"]
-    ev = events.select(
-        *[F.col(c) for c in cols if c in events.columns],
-        *(
-            [F.col("seq").cast("long").alias("seq")]
-            if "seq" in events.columns
-            # same fallback as assemble_transactions_stream: wal2json
-            # carries intra-txn order in meta['pos'] (review r2 — a
-            # NULL seq lost the tiebreaker and emitted arbitrary order)
-            else [
-                F.coalesce(
-                    F.col("meta").getItem("pos").cast("long"), F.lit(0)
-                ).alias("seq")
-            ]
-            if "meta" in events.columns
-            else [F.lit(0).cast("long").alias("seq")]
-        ),
-    )
-    return ev.groupBy("xid").transformWithStateInPandas(
-        statefulProcessor=_txn_assembler_class()(ttl_ms),
-        outputStructType=TXN_OUTPUT_SCHEMA,
+
+def _run(df, keys, processor, output_schema, ttl_ms) -> DataFrame:
+    _require_protobuf()
+    return df.groupBy(*keys).transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=output_schema,
         outputMode="append",
         timeMode="None" if ttl_ms is None else "ProcessingTime",
     )
 
 
-# --------------------------------------------------- TOAST fill (tws)
-def _toast_fill_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+class _BufferedFold(StatefulProcessor):
+    """ListState buffer + ValueState meta around a buffering fold. With
+    no meta schema the key's state is its buffer alone."""
 
-    from pg_logical_replication_spark.streaming.stateful import (
-        _TOAST_OUT_COLS,
-        _as_dict,
-    )
+    def __init__(self, fold, columns, meta_schema, ttl_ms):
+        self._fold, self._columns = fold, columns
+        self._meta_schema, self._ttl_ms = meta_schema, ttl_ms
 
-    class ToastFill(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # one post-fill row image per key — ValueState, but in the
-            # RocksDB store with per-column-family lifecycle instead of
-            # applyInPandasWithState's single opaque blob per key
-            self._img = handle.getValueState("img", "img string")
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._buf = handle.getListState(
+            "buffered", "item string", ttlDurationMs=self._ttl_ms
+        )
+        self._meta = None if self._meta_schema is None else handle.getValueState(
+            "meta", self._meta_schema, ttlDurationMs=self._ttl_ms
+        )
 
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            img: dict[str, Any] = (
-                json.loads(self._img.get()[0]) if self._img.exists() else {}
-            )
-            recs: list[dict[str, Any]] = []
-            for pdf in rows:
-                recs.extend(pdf.to_dict("records"))
-            recs.sort(key=lambda r: (
-                0 if r.get("lsn_long") is None or pd.isna(r.get("lsn_long"))
-                else int(r["lsn_long"]),
-                0 if r.get("seq") is None or pd.isna(r.get("seq"))
-                else int(r.get("seq")),
-            ))
-            out = []
-            for row in recs:
-                after = _as_dict(row.get("after"))
-                if after is not None:
-                    # NOTE: the column is named t_toast, not _toast — the
-                    # transformWithState Arrow bridge renames leading-
-                    # underscore columns positionally (_toast arrived as
-                    # '_5'; found by the round-6 agreement test)
-                    toasted = set((row.get("t_toast") or "").split(",")) - {""}
-                    for c in toasted:
-                        if after.get(c) is None and c in img:
-                            after[c] = img[c]
-                    img.update(after)
-                row["after"] = after
-                row["key"] = _as_dict(row.get("key"))
-                row["before"] = _as_dict(row.get("before"))
-                out.append({f: row.get(f) for f in _TOAST_OUT_COLS})
-            self._img.update((json.dumps(img),))
-            if out:
-                yield pd.DataFrame(out, columns=_TOAST_OUT_COLS)
+    def _buffered(self) -> list[str]:
+        return [s for (s,) in self._buf.get()] if self._buf.exists() else []
 
-        def close(self) -> None:
-            pass
+    def handleInputRows(
+        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
+    ) -> Iterator[pd.DataFrame]:
+        if self._meta is None:
+            meta = () if self._buf.exists() else None
+        else:
+            meta = self._meta.get() if self._meta.exists() else None
+        out, step = self._fold(
+            key, folds.records(rows, folds.wire_order), meta, self._buffered
+        )
+        if step.meta is None or step.clear:
+            self._buf.clear()
+        if step.meta is not None and step.append:  # incremental — no rewrite
+            self._buf.appendList([(s,) for s in step.append])
+        if self._meta is not None:
+            if step.meta is None:
+                self._meta.clear()
+            else:
+                self._meta.update(step.meta)
+        if out:
+            yield pd.DataFrame(out, columns=self._columns)
 
-    return ToastFill
+
+class _ValueFold(StatefulProcessor):
+    """One ValueState around a value fold, written when it changes."""
+
+    def __init__(self, fold, columns, state_schema, order, ttl_ms):
+        self._fold, self._columns, self._schema = fold, columns, state_schema
+        self._order, self._ttl_ms = order, ttl_ms
+
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._state = handle.getValueState(
+            "state", self._schema, ttlDurationMs=self._ttl_ms
+        )
+
+    def handleInputRows(
+        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
+    ) -> Iterator[pd.DataFrame]:
+        old = self._state.get() if self._state.exists() else None
+        out, new = self._fold(key, folds.records(rows, self._order), old)
+        if new != old:
+            self._state.update(new)
+        if out:
+            yield pd.DataFrame(out, columns=self._columns)
+
+
+def tws_buffered(df, keys, fold, columns, output_schema, meta_schema=None,
+                 timeout_ms=None) -> DataFrame:
+    """A buffering fold on transformWithStateInPandas; ``timeout_ms``
+    becomes the state TTL: an expired transaction's state vanishes and a
+    late fate finds nothing — the same withhold the applyInPandasWithState
+    timeout implements."""
+    processor = _BufferedFold(fold, columns, meta_schema, timeout_ms)
+    return _run(df, keys, processor, output_schema, timeout_ms)
+
+
+def tws_value(df, keys, fold, columns, output_schema, state_schema,
+              order=None, ttl_ms=None) -> DataFrame:
+    """A value fold on transformWithStateInPandas (``ttl_ms`` = state TTL)."""
+    processor = _ValueFold(fold, columns, state_schema, order, ttl_ms)
+    return _run(df, keys, processor, output_schema, ttl_ms)
+
+
+# ------------------------------------------- operators shared with aip
+def assemble_transactions_tws(
+    events: DataFrame, ttl_ms: int | None = None
+) -> DataFrame:
+    """Commit-gated txn assembly via transformWithStateInPandas.
+
+    Same contract and fold as ``assemble_transactions_stream``: DML of
+    committed transactions only, stamped with xid + commit_ts,
+    wire-ordered within the transaction; uncommitted/aborted txns never
+    emit. ``ttl_ms`` evicts abandoned transactions' state (rollback
+    invisibility GC) — requires ``timeMode='ProcessingTime'``, so leave
+    it ``None`` for drain-and-stop (``availableNow``) runs.
+    """
+    return _assemble(events, tws_buffered, ttl_ms)
 
 
 def toast_fill_tws(events: DataFrame, key_columns: list[str]) -> DataFrame:
-    """transformWithStateInPandas twin of
-    ``streaming.stateful.toast_fill_stream`` — identical contract
+    """transformWithStateInPandas form of
+    ``streaming.stateful.toast_fill_stream`` — the same fold
     (cross-micro-batch unchanged-TOAST completion, one row image per
-    (schema, table, key), explicit NULLs overwrite), agreement-tested
-    in tests/test_tws.py."""
-    from pyspark.sql import functions as F
-
-    from pg_logical_replication_spark.streaming.stateful import (
-        _TOAST_OUT_COLS,
-        TOAST_OUTPUT_SCHEMA,
-    )
-
-    identity = F.concat_ws(
-        "\x1f",
-        *[
-            F.coalesce(
-                F.col("key").getItem(k),
-                F.col("after").getItem(k),
-                F.lit("\x1e"),
-            )
-            for k in key_columns
-        ],
-    )
-    ev = events.select(
-        *[F.col(c) for c in _TOAST_OUT_COLS if c in events.columns],
-        *(
-            []
-            if "seq" in events.columns
-            else [F.lit(None).cast("long").alias("seq")]
-        ),
-        F.col("meta").getItem("unchanged_toast").alias("t_toast"),
-        identity.alias("t_identity"),
-    )
-    return ev.groupBy("schema", "table", "t_identity").transformWithStateInPandas(
-        statefulProcessor=_toast_fill_class()(),
-        outputStructType=TOAST_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )
-
-
-# ------------------------------------- chunked-JSON reassembly (tws)
-def _reassembler_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Reassembler(StatefulProcessor):
-        """The genuinely-unbounded state case the ListState exists for:
-        a pending chunked wal2json document can be arbitrarily large
-        (one TOASTed row can exceed logical_decoding_work_mem — that is
-        WHY the plugin chunks). applyInPandasWithState rewrites the
-        whole carried text per micro-batch (O(doc²) total I/O over a
-        doc's lifetime); here each fragment APPENDS to a ListState and
-        the text is concatenated exactly once, at completion."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._frags = handle.getListState("frags", "frag string")
-            self._meta = handle.getValueState(
-                "meta", "depth long, start_seq long"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            import re as _re
-
-            depth, start_seq = (
-                self._meta.get() if self._meta.exists() else (0, 0)
-            )
-            pending = self._frags.exists()
-            frags: list[tuple[int, str]] = []
-            for pdf in rows:
-                for row in pdf.to_dict("records"):
-                    v = row.get("value")
-                    if v is None or not str(v).strip():
-                        continue
-                    frags.append((int(row["seq"]), str(v)))
-            frags.sort()
-            out: list[tuple[int, str]] = []
-            for seq, val in frags:
-                stripped = _re.sub(r'"[^"\\]*(?:\\.[^"\\]*)*"', "", val)
-                delta = stripped.count("{") - stripped.count("}")
-                if not pending:
-                    start_seq = seq
-                self._frags.appendValue((val,))
-                pending = True
-                depth += delta
-                if depth == 0:
-                    doc = "".join(s for (s,) in self._frags.get())
-                    out.append((start_seq, doc))
-                    self._frags.clear()
-                    pending, depth = False, 0
-            self._meta.update((int(depth), int(start_seq)))
-            if out:
-                yield pd.DataFrame(out, columns=["seq", "value"])
-
-        def close(self) -> None:
-            pass
-
-    return Reassembler
+    (schema, table, key), explicit NULLs overwrite) on a ValueState."""
+    return _toast(events, key_columns, tws_value)
 
 
 def reassemble_json_documents_tws(
@@ -339,89 +189,13 @@ def reassemble_json_documents_tws(
     order_col: str = "seq",
     slot_col: str | None = None,
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
-    ``streaming.stateful.reassemble_json_documents_stream`` — identical
-    contract; pending fragments append to a ListState instead of
-    rewriting one carried blob per micro-batch."""
-    from pyspark.sql import functions as F
-
-    key = slot_col if slot_col is not None else "__slot"
-    df = raw.select(
-        *(
-            [F.col(slot_col)]
-            if slot_col is not None
-            else [F.lit(0).alias(key)]
-        ),
-        F.col(order_col).cast("long").alias("seq"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    out = df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_reassembler_class()(),
-        outputStructType="seq long, value string",
-        outputMode="append",
-        timeMode="None",
-    )
-    return out.withColumnRenamed("seq", order_col).withColumnRenamed(
-        "value", value_col
-    )
-
-
-# ------------------------------------------- sequence packing (tws)
-def _packer_class(budget: int):
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from pg_logical_replication_spark.operators.packing import BIN_STRIDE
-
-    class Packer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState(
-                "open_bin", "nbin long, acc long, seq long"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (bucket,) = key
-            nbin, acc, seq = (
-                self._open.get()
-                if self._open.exists()
-                else (-1, budget + 1, 0)
-            )
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            pdf = pdf.sort_values("doc_id")
-            out_bin, out_seq = [], []
-            for n in pdf["n_tokens"]:
-                n = int(n)
-                if acc + n > budget:
-                    nbin += 1
-                    acc = n
-                    seq = 0
-                else:
-                    acc += n
-                    seq += 1
-                out_bin.append(nbin)
-                out_seq.append(seq)
-            if nbin >= BIN_STRIDE:
-                raise ValueError(
-                    f"pack_sequences_tws: bucket {bucket} exceeded the "
-                    f"{BIN_STRIDE} per-bucket bin band"
-                )
-            self._open.update((int(nbin), int(acc), int(seq)))
-            yield pdf.assign(
-                bin_id=pdf["bucket"] * BIN_STRIDE
-                + pd.Series(out_bin, index=pdf.index),
-                bin_seq=out_seq,
-            )
-
-        def close(self) -> None:
-            pass
-
-    return Packer
+    """transformWithStateInPandas form of
+    ``streaming.stateful.reassemble_json_documents_stream``. A pending
+    chunked wal2json document can be arbitrarily large (one TOASTed row
+    can exceed logical_decoding_work_mem — that is WHY the plugin
+    chunks), so each fragment APPENDS to a ListState and the text is
+    concatenated exactly once, at completion."""
+    return _reassemble(raw, value_col, order_col, slot_col, tws_buffered)
 
 
 def pack_sequences_tws(
@@ -431,345 +205,38 @@ def pack_sequences_tws(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
-    ``streaming.packing.pack_sequences_stream`` — identical greedy rule
+    """transformWithStateInPandas form of
+    ``streaming.packing.pack_sequences_stream`` — the same greedy fold
     and output schema; the open bin rides a typed ValueState."""
-    from pyspark.sql import functions as F
+    from pg_logical_replication_spark.streaming.packing import _pack
 
-    from pg_logical_replication_spark.operators.dedup import tokens_expr
-
-    counted = stream.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokens_expr(text_col)).cast("int").alias("n_tokens"),
-        F.expr(f"{id_col} div {bucket_size}").alias("bucket"),
-    )
-    return counted.groupBy("bucket").transformWithStateInPandas(
-        statefulProcessor=_packer_class(budget)(),
-        outputStructType=(
-            "doc_id long, n_tokens int, bucket long, bin_id long, "
-            "bin_seq int"
-        ),
-        outputMode="append",
-        timeMode="None",
-    )
-
-
-# --------------------------------- streamed / two-phase txn gate (tws)
-def _stream_gate_class(ttl_ms: int | None, reemit_unmatched_fates: bool):
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from pg_logical_replication_spark.streaming.stateful import (
-        _DML_OPS,
-        _EVENT_FIELDS,
-        _OUT_COLUMNS,
-        _as_dict,
-    )
-
-    class StreamGate(StatefulProcessor):
-        """The LARGEST-state gate in the engine: a protocol-v2 streamed
-        transaction buffers its entire change volume until the fate row
-        arrives — the reference's huge-transaction scenario is 500k rows
-        (decoder-pgoutput.spec.ts:324-373). applyInPandasWithState
-        rewrites the whole buffered array every micro-batch the txn
-        stays open (O(txn²) total state I/O); here each batch's rows
-        APPEND to a ListState and the buffer is read exactly once, at
-        commit. Measured crossover (SCALE.md r6): the aip form's lower
-        per-batch constants win below ~2·10⁵ buffered rows; at the
-        500k-row scenario this gate wins ×1.56 and grows from there —
-        pick per workload. ``ttl_ms`` maps timeout GC onto state TTL:
-        an expired txn's state vanishes and a late fate finds nothing —
-        the same withhold the GroupState timeout implements."""
-
-        def __init__(self):
-            pass
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getListState(
-                "buffered", "ev string", ttlDurationMs=ttl_ms
-            )
-            self._aborted = handle.getListState(
-                "aborted", "sub long", ttlDurationMs=ttl_ms
-            )
-            # existence marker: the aip twin's state.update() runs even
-            # when a batch buffered nothing (e.g. a lone stream_prepare
-            # for a txn whose DML is all outside the publication), and
-            # the fate-only re-emit branch keys off state EXISTENCE —
-            # without this, the two "identical contract" gates diverge
-            # on that input (round-6 review #3)
-            self._seen = handle.getValueState(
-                "seen", "b boolean", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (top_xid,) = key
-            had_state = (
-                self._buf.exists()
-                or self._aborted.exists()
-                or self._seen.exists()
-            )
-            aborted = (
-                {s for (s,) in self._aborted.get()}
-                if self._aborted.exists()
-                else set()
-            )
-            new_aborts: list[tuple[int]] = []
-
-            recs: list[dict[str, Any]] = []
-            for pdf in rows:
-                recs.extend(pdf.to_dict("records"))
-            recs.sort(key=lambda r: (
-                0 if r.get("lsn_long") is None or pd.isna(r.get("lsn_long"))
-                else int(r["lsn_long"]),
-                0 if r.get("seq") is None or pd.isna(r.get("seq"))
-                else int(r.get("seq")),
-            ))
-
-            # fate-only key with no buffered state: plain-2PC fates for
-            # a downstream prepared gate (see _make_stream_resolve)
-            if not had_state and recs and all(
-                r["op"] in ("commit_prepared", "rollback_prepared")
-                for r in recs
-            ):
-                if not reemit_unmatched_fates:
-                    return
-                out = []
-                for row in recs:
-                    ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                    for f in ("lsn_long", "seq"):
-                        v = ev.get(f)
-                        ev[f] = None if v is None or pd.isna(v) else int(v)
-                    ev["xid"] = top_xid
-                    ts = row.get("commit_ts")
-                    ev["commit_ts"] = (
-                        None if ts is None or pd.isna(ts) else ts
-                    )
-                    for f in ("key", "before", "after"):
-                        ev[f] = _as_dict(ev.get(f))
-                    out.append(ev)
-                yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-                return
-
-            commit: dict[str, Any] | None = None
-            fresh: list[tuple[str]] = []
-            for row in recs:
-                op = row["op"]
-                if op in ("stream_commit", "commit_prepared"):
-                    ts = row.get("commit_ts")
-                    commit = {
-                        "commit_ts": None if ts is None or pd.isna(ts) else ts
-                    }
-                elif op == "rollback_prepared":
-                    self._buf.clear()
-                    self._aborted.clear()
-                    self._seen.clear()
-                    return
-                elif op == "stream_prepare":
-                    pass  # fate is the later commit/rollback_prepared
-                elif op == "stream_abort":
-                    sub = row.get("g_subxid")
-                    sub = None if sub is None or pd.isna(sub) else int(sub)
-                    if sub is None or sub == top_xid:  # top-level abort
-                        self._buf.clear()
-                        self._aborted.clear()
-                        self._seen.clear()
-                        return
-                    aborted.add(sub)
-                    new_aborts.append((sub,))
-                elif op in _DML_OPS:
-                    ev = {f: row.get(f) for f in _EVENT_FIELDS}
-                    for f in ("lsn_long", "seq"):
-                        v = ev.get(f)
-                        ev[f] = None if v is None or pd.isna(v) else int(v)
-                    rx = row.get("xid")
-                    ev["_rowxid"] = (
-                        None if rx is None or pd.isna(rx) else int(rx)
-                    )
-                    for f in ("key", "before", "after"):
-                        ev[f] = _as_dict(ev.get(f))
-                    ev["commit_ts"] = None
-                    fresh.append((json.dumps(ev),))
-
-            if commit is None:
-                if fresh:
-                    self._buf.appendList(fresh)  # incremental — no rewrite
-                if new_aborts:
-                    self._aborted.appendList(new_aborts)
-                self._seen.update((True,))
-                return
-
-            buffered = (
-                [s for (s,) in self._buf.get()] if self._buf.exists() else []
-            )
-            buffered.extend(s for (s,) in fresh)
-            out = []
-            for s in buffered:
-                ev = json.loads(s)
-                if ev.pop("_rowxid", None) in aborted:
-                    continue
-                ev["xid"] = top_xid
-                ev["commit_ts"] = commit["commit_ts"]
-                out.append(ev)
-            out.sort(key=lambda r: (r.get("lsn_long") or 0, r.get("seq") or 0))
-            self._buf.clear()
-            self._aborted.clear()
-            self._seen.clear()
-            if out:
-                yield pd.DataFrame(out, columns=_OUT_COLUMNS)
-
-        def close(self) -> None:
-            pass
-
-    return StreamGate
-
-
-def _gated_stream_tws(
-    events: DataFrame,
-    top,
-    ctrl_ops: list[str],
-    ttl_ms: int | None,
-    passthrough: bool,
-    reemit_unmatched_fates: bool = True,
-) -> DataFrame:
-    from pg_logical_replication_spark.streaming.stateful import (
-        TXN_OUTPUT_SCHEMA,
-        gate_frames,
-    )
-
-    # g_-prefixed, NOT _-prefixed: the tws Arrow bridge renames
-    # leading-underscore columns positionally (round-6 finding); the
-    # scaffolding itself is shared with the aip gate (gate_frames)
-    gate_input, rest, key_col = gate_frames(events, top, ctrl_ops, "g_")
-    gated = gate_input.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_stream_gate_class(
-            ttl_ms, reemit_unmatched_fates
-        )(),
-        outputStructType=TXN_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None" if ttl_ms is None else "ProcessingTime",
-    )
-    if not passthrough:
-        return gated
-    return gated.unionByName(rest)
+    return _pack(stream, budget, bucket_size, text_col, id_col, tws_value)
 
 
 def resolve_streamed_tws(
     events: DataFrame, ttl_ms: int | None = None, passthrough: bool = True
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
-    ``streaming.stateful.resolve_streamed_stream`` — identical contract
+    """transformWithStateInPandas form of
+    ``streaming.stateful.resolve_streamed_stream`` — the same fold
     (decode-time top-xid keying, commit flush minus aborted subxacts,
-    rollback invisibility, plain-2PC fate re-emission); the buffered
-    transaction rides a ListState so a 500k-row streamed txn appends
-    per batch instead of rewriting its whole buffer."""
-    from pyspark.sql import functions as F
-
-    top = F.col("meta").getItem("stream_top_xid").cast("long")
-    return _gated_stream_tws(
-        events, top, ["stream_start", "stream_stop"], ttl_ms, passthrough
-    )
+    rollback invisibility, plain-2PC fate re-emission). Measured
+    crossover (SCALE.md r6): the aip form's lower per-batch constants
+    win below ~2·10⁵ buffered rows; at the 500k-row scenario this gate
+    wins ×1.56 and grows from there — pick per workload
+    (``resolve_streamed_gate``)."""
+    return _gated(events, False, passthrough, tws_buffered, ttl_ms)
 
 
 def resolve_transactions_tws(
     events: DataFrame, ttl_ms: int | None = None, passthrough: bool = True
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
+    """transformWithStateInPandas form of
     ``streaming.stateful.resolve_transactions_stream`` (combined
     streamed + plain-2PC gate; unmatched fates swallowed)."""
-    from pyspark.sql import functions as F
-
-    top = F.coalesce(
-        F.col("meta").getItem("stream_top_xid").cast("long"),
-        F.col("meta").getItem("prepared_xid").cast("long"),
-    )
-    return _gated_stream_tws(
-        events,
-        top,
-        ["stream_start", "stream_stop", "begin_prepare", "prepare"],
-        ttl_ms,
-        passthrough,
-        reemit_unmatched_fates=False,
-    )
+    return _gated(events, True, passthrough, tws_buffered, ttl_ms)
 
 
-# ------------------------------------------ near-dup band gate (tws)
-def _band_claim_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class BandClaim(StatefulProcessor):
-        """First-claim-wins per (band_idx, band_key): state is one
-        existence bit per claimed band — the same O(rate × horizon ×
-        bands) footprint as dropDuplicatesWithinWatermark's key store,
-        but in RocksDB column families with optional TTL eviction."""
-
-        def __init__(self, ttl_ms: int | None):
-            self._ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._claimed = handle.getValueState(
-                "claimed", "claimed boolean", ttlDurationMs=self._ttl_ms
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            if self._claimed.exists():
-                return  # claimed in an earlier micro-batch: suppress
-            recs: list[dict[str, Any]] = []
-            for pdf in rows:
-                recs.extend(pdf.to_dict("records"))
-
-            # within-batch tie: earliest event time, then smallest id —
-            # deterministic where the built-in keeps an arbitrary first.
-            # NULL ids sort last and pass through as NULL (the built-in
-            # form emits them too; crashing the query on one malformed
-            # upstream row would be the wrong failure mode). Ids keep
-            # their NATIVE type end-to-end (long, string, …) — the twin
-            # must not narrow stream_near_dup_gate's type-agnostic
-            # id contract; only same-typed values are ever compared
-            # (the placeholder for NULLs is shielded by the is-null
-            # tuple element before it).
-            def _did(r):
-                d = r.get("doc_id")
-                try:
-                    bad = d is None or pd.isna(d)
-                except (TypeError, ValueError):
-                    bad = False
-                return None if bad else d
-
-            recs.sort(
-                key=lambda r: (
-                    r["ts"],
-                    _did(r) is None,
-                    0 if _did(r) is None else _did(r),
-                )
-            )
-            self._claimed.update((True,))
-            w = recs[0]
-            yield pd.DataFrame(
-                [
-                    {
-                        "doc_id": _did(w),
-                        "ts": w["ts"],
-                        "band_idx": int(key[0]),
-                        "band_key": key[1],
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return BandClaim
-
-
+# ------------------------------------------------------ tws-only monitors
 def stream_near_dup_gate_tws(
     stream: DataFrame,
     text_col: str = "text",
@@ -780,14 +247,18 @@ def stream_near_dup_gate_tws(
     shingle_n: int = 3,
     ttl_ms: int | None = None,
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
+    """transformWithStateInPandas form of
     ``streaming.dedup.stream_near_dup_gate`` — same contract (explode
     MinHash band keys, first claim per (band_idx, band_key) wins, feed
     :func:`streaming.dedup.near_dup_gate_rollup` per micro-batch),
-    agreement-tested in tests/test_tws.py.
+    agreement-tested in tests/test_tws.py. State is one existence bit
+    per claimed band — the same O(rate × horizon × bands) footprint as
+    dropDuplicatesWithinWatermark's key store. Within a batch the
+    earliest event time, then the smallest id, wins — deterministic
+    where the built-in keeps an arbitrary first; NULL ids pass through.
 
     Horizon semantics differ by backend, same trade as the txn gate:
-    the built-in form evicts by EVENT-time watermark; this twin evicts
+    the built-in form evicts by EVENT-time watermark; this one evicts
     by processing-time state TTL (``ttl_ms``; ``None`` = unbounded
     state — fine for bounded replays, not for a forever-run). Use the
     built-in form when event-time retention matters; use this one when
@@ -803,82 +274,19 @@ def stream_near_dup_gate_tws(
         id_out="doc_id", ts_out="ts",
     )
     # carry the caller's id/ts types through unchanged — the built-in
-    # twin is type-agnostic (string ids, UUIDs, …) and this one must
+    # form is type-agnostic (string ids, UUIDs, …) and this one must
     # not narrow that contract to longs
     id_t = exploded.schema["doc_id"].dataType.simpleString()
     ts_t = exploded.schema["ts"].dataType.simpleString()
-    out = exploded.groupBy("band_idx", "band_key").transformWithStateInPandas(
-        statefulProcessor=_band_claim_class()(ttl_ms),
-        outputStructType=(
-            f"doc_id {id_t}, ts {ts_t}, band_idx int, band_key string"
-        ),
-        outputMode="append",
-        timeMode="None" if ttl_ms is None else "ProcessingTime",
+    out = tws_value(
+        exploded, ["band_idx", "band_key"], folds.band_claim_fold,
+        ["doc_id", "ts", "band_idx", "band_key"],
+        f"doc_id {id_t}, ts {ts_t}, band_idx int, band_key string",
+        "claimed boolean", order=folds.claim_order, ttl_ms=ttl_ms,
     )
     return out.withColumnRenamed("doc_id", id_col).withColumnRenamed(
         "ts", ts_col
     )
-
-
-# ------------------------------- multi-origin conflict monitor (tws)
-def _conflict_monitor_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ConflictMonitor(StatefulProcessor):
-        """Per (window, key): fold (min origin, max origin, writes,
-        last-writer) incrementally; emit the CURRENT conflict record
-        whenever a batch leaves the key in conflict (>=2 distinct
-        origins, tested as min!=max — the same predicate as
-        q_cdc_update_conflicts). Emissions are monotone refinements:
-        the LAST record per key equals the batch query's per-key row."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "conflict",
-                "o_min long, o_max long, n_writes long, "
-                "w_origin long, w_eid long",
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            win, user_id = key
-            st = (
-                self._st.get()
-                if self._st.exists()
-                else (None, None, 0, None, -1)
-            )
-            o_min, o_max, n_writes, w_origin, w_eid = st
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            for origin, eid in zip(pdf["origin"], pdf["event_id"]):
-                origin, eid = int(origin), int(eid)
-                o_min = origin if o_min is None else min(o_min, origin)
-                o_max = origin if o_max is None else max(o_max, origin)
-                n_writes += 1
-                if eid > w_eid:
-                    w_eid, w_origin = eid, origin
-            self._st.update(
-                (o_min, o_max, int(n_writes), w_origin, int(w_eid))
-            )
-            if o_min != o_max:
-                yield pd.DataFrame(
-                    {
-                        "win": [int(win)],
-                        "user_id": [int(user_id)],
-                        "n_writes": [int(n_writes)],
-                        "winner_origin": [int(w_origin)],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return ConflictMonitor
 
 
 def conflict_monitor_tws(
@@ -888,86 +296,29 @@ def conflict_monitor_tws(
     id_col: str = "event_id",
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Streaming twin of ``q_cdc_update_conflicts``: live multi-origin
+    """Streaming form of ``q_cdc_update_conflicts``: live multi-origin
     write-write conflict records as the stream drains. State per
     (window, key) is five longs — O(active windows × keys), independent
     of stream length; window close-out is the caller's retention policy
     (drop state by timer once a window can no longer receive writes).
 
-    Emits one record per conflicted key per batch that touches it; the
+    Emits one record per conflicted key per batch that touches it
+    (>=2 distinct origins, tested as min!=max — the same predicate as
+    q_cdc_update_conflicts); emissions are monotone refinements, so the
     last emission per key agrees with the batch query's per-key
     aggregate (asserted in tests/test_tws.py)."""
-    from pyspark.sql import functions as F
-
     keyed = stream.select(
         F.expr(f"{id_col} div {window_size}").alias("win"),
         (F.col(id_col) % n_origins).cast("long").alias("origin"),
         F.col(key_col).cast("long").alias("user_id"),
         F.col(id_col).cast("long").alias("event_id"),
     )
-    return keyed.groupBy("win", "user_id").transformWithStateInPandas(
-        statefulProcessor=_conflict_monitor_class()(),
-        outputStructType=(
-            "win long, user_id long, n_writes long, winner_origin long"
-        ),
-        outputMode="append",
-        timeMode="None",
+    return tws_value(
+        keyed, ["win", "user_id"], folds.conflict_fold,
+        ["win", "user_id", "n_writes", "winner_origin"],
+        "win long, user_id long, n_writes long, winner_origin long",
+        "o_min long, o_max long, n_writes long, w_origin long, w_eid long",
     )
-
-
-# ----------------------------------- watermark lateness monitor (tws)
-def _lateness_monitor_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LatenessMonitor(StatefulProcessor):
-        """Per event_type: the running max event-time IS the watermark
-        (q_events_watermark_lateness's prefix max, streaming-native);
-        each batch emits that type's cumulative lateness census so an
-        operator watches the watermark horizon the stream actually
-        needs. Rows inside one batch fold in arrival order (the stream
-        source's order column), matching the batch replay exactly."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "wm", "wm long, n_events long, n_late long, max_late long"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (event_type,) = key
-            wm, n_events, n_late, max_late = (
-                self._st.get() if self._st.exists() else (None, 0, 0, 0)
-            )
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            pdf = pdf.sort_values("arr")
-            for ts_us in pdf["ts_us"]:
-                ts_us = int(ts_us)
-                n_events += 1
-                if wm is not None and ts_us < wm:
-                    n_late += 1
-                    max_late = max(max_late, wm - ts_us)
-                wm = ts_us if wm is None else max(wm, ts_us)
-            self._st.update((int(wm), int(n_events), int(n_late), int(max_late)))
-            yield pd.DataFrame(
-                {
-                    "event_type": [event_type],
-                    "n_events": [int(n_events)],
-                    "n_late": [int(n_late)],
-                    "max_late_us": [int(max_late)],
-                    "watermark_us": [int(wm)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return LatenessMonitor
 
 
 def lateness_monitor_tws(
@@ -979,141 +330,54 @@ def lateness_monitor_tws(
     """Streaming lateness census with a PER-TYPE watermark: for each
     event_type, the running max event-time over that type's arrivals
     folds in a four-long ValueState; each batch that touches a type
-    emits its cumulative census. The LAST emission per type equals a
+    emits its cumulative census. Rows inside one batch fold in arrival
+    order (``arrival_col``). The LAST emission per type equals a
     per-type prefix-max batch replay (agreement-tested in
     tests/test_tws.py::test_lateness_monitor_tws_agrees_with_batch_replay,
     which replays the same per-type fold).
 
-    This is deliberately NOT the twin of ``q_events_watermark_lateness``
-    (ADVICE r8): that batch query folds ONE GLOBAL prefix-max across all
-    types in arrival order — the horizon-sizing replay — so its
-    ``n_late``/``max_late_us`` differ from this monitor's on the same
-    data whenever types interleave. A faithful global twin would key the
-    stateful op on a constant, serializing every event through one
-    task; keying by type keeps the monitor partitioned (the per-key
-    watermark view, analogous to Kafka/Flink per-partition watermarks
-    before the min-combine). State is O(|types|) — independent of
-    stream length."""
-    from pyspark.sql import functions as F
-
+    This is deliberately NOT the streaming form of
+    ``q_events_watermark_lateness`` (ADVICE r8): that batch query folds
+    ONE GLOBAL prefix-max across all types in arrival order — the
+    horizon-sizing replay — so its ``n_late``/``max_late_us`` differ
+    from this monitor's on the same data whenever types interleave. A
+    faithful global form would key the stateful op on a constant,
+    serializing every event through one task; keying by type keeps the
+    monitor partitioned (the per-key watermark view, analogous to
+    Kafka/Flink per-partition watermarks before the min-combine). State
+    is O(|types|) — independent of stream length."""
     keyed = stream.select(
         F.col(type_col).alias("event_type"),
         F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
         F.col(arrival_col).cast("long").alias("arr"),
     )
-    return keyed.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=_lateness_monitor_class()(),
-        outputStructType=(
-            "event_type string, n_events long, n_late long, "
-            "max_late_us long, watermark_us long"
-        ),
-        outputMode="append",
-        timeMode="None",
+    return tws_value(
+        keyed, ["event_type"], folds.lateness_fold,
+        ["event_type", "n_events", "n_late", "max_late_us", "watermark_us"],
+        "event_type string, n_events long, n_late long, "
+        "max_late_us long, watermark_us long",
+        "wm long, n_events long, n_late long, max_late long",
+        order=folds.arrival_order,
     )
-
-
-# ------------------------------------- schema-change monitor (tws)
-def _schema_monitor_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SchemaChangeMonitor(StatefulProcessor):
-        """Per table: the last-seen relation declaration (column names
-        + type oids, comma-joined) and a version counter live in a
-        three-field ValueState; each relation row that CHANGES the
-        declaration emits one change record with the diff against the
-        predecessor — including the very first announcement (version 1,
-        everything 'added'), matching the batch schema_change_log fold.
-        Re-announcements of the SAME declaration (pgoutput re-sends 'R'
-        after reconnect) are folded away silently, exactly like the
-        reference's relation cache treating them as cache refreshes."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "rel", "cols string, oids string, version long"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            from pg_logical_replication_spark.functions.pg_values import (
-                OID_TO_PG_TYPE,
-            )
-
-            (table,) = key
-            pcols, poids, version = (
-                self._st.get() if self._st.exists() else (None, None, 0)
-            )
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            pdf = pdf.sort_values(["lsn_long", "seq"])
-            out: dict[str, list] = {
-                c: []
-                for c in ("table", "version", "lsn_long", "n_columns",
-                          "added", "dropped", "widened")
-            }
-            for cols_csv, oids_csv, lsn in zip(
-                pdf["cols"], pdf["oids"], pdf["lsn_long"]
-            ):
-                if cols_csv == pcols and oids_csv == poids:
-                    continue  # cache refresh, not a change
-                cur = [c for c in (cols_csv or "").split(",") if c]
-                oids = [o for o in (oids_csv or "").split(",") if o]
-                cm = dict(zip(cur, oids))
-                prev = [c for c in (pcols or "").split(",") if c]
-                pm = dict(zip(
-                    prev, [o for o in (poids or "").split(",") if o]
-                ))
-                version += 1
-
-                def tname(oid):
-                    return OID_TO_PG_TYPE.get(int(oid), "text")
-
-                out["table"].append(table)
-                out["version"].append(int(version))
-                out["lsn_long"].append(int(lsn))
-                out["n_columns"].append(len(cur))
-                out["added"].append(
-                    ",".join(c for c in cur if c not in pm)
-                )
-                out["dropped"].append(
-                    ",".join(c for c in prev if c not in cm)
-                )
-                out["widened"].append(",".join(
-                    f"{c}:{tname(pm[c])}->{tname(cm[c])}"
-                    for c in cur
-                    if c in pm and pm[c] != cm[c]
-                ))
-                pcols, poids = cols_csv, oids_csv
-            self._st.update((pcols, poids, int(version)))
-            if out["table"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return SchemaChangeMonitor
 
 
 def schema_change_monitor_tws(stream: DataFrame) -> DataFrame:
-    """Streaming twin of ``operators/schema_evolution.schema_change_log``
+    """Streaming form of ``operators/schema_evolution.schema_change_log``
     — the live schema-change topic: relation announcements stream in,
     version-change records stream out, Debezium's schema-change topic
     shape over pgoutput 'R' rows (reference relation-cache anchor:
     ``pgoutput-parser.ts:86-110``). Cross-batch: a re-announcement in a
     later micro-batch diffs against state, so ALTERs spanning batches
-    emit exactly one record each (agreement-tested against the batch
-    fold in tests/test_tws.py).
+    emit exactly one record each, the first announcement included
+    (version 1, everything 'added'); re-announcements of the SAME
+    declaration (pgoutput re-sends 'R' after reconnect) fold away
+    silently, like the reference's relation cache refresh
+    (agreement-tested against the batch fold in tests/test_tws.py).
 
     State is O(|tables| × declaration width) — registry-sized, never
     data-sized; the stateful op keys on table so it stays partitioned.
     The input is pre-filtered to relation rows: the DML firehose never
     reaches the stateful operator."""
-    from pyspark.sql import functions as F
-
     keyed = stream.filter(
         (F.col("op") == "relation")
         & F.col("meta").getItem("columns").isNotNull()
@@ -1125,84 +389,15 @@ def schema_change_monitor_tws(stream: DataFrame) -> DataFrame:
         F.col("meta").getItem("columns").alias("cols"),
         F.col("meta").getItem("type_oids").alias("oids"),
     )
-    return keyed.groupBy("table").transformWithStateInPandas(
-        statefulProcessor=_schema_monitor_class()(),
-        outputStructType=(
-            "table string, version long, lsn_long long, n_columns long, "
-            "added string, dropped string, widened string"
-        ),
-        outputMode="append",
-        timeMode="None",
+    return tws_value(
+        keyed, ["table"], folds.schema_change_fold,
+        ["table", "version", "lsn_long", "n_columns", "added", "dropped",
+         "widened"],
+        "table string, version long, lsn_long long, n_columns long, "
+        "added string, dropped string, widened string",
+        "cols string, oids string, version long",
+        order=folds.wire_order,
     )
-
-
-# --------------------------------------------- net-change monitor (tws)
-def _net_monitor_class():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class NetChangeMonitor(StatefulProcessor):
-        """Per key: fold (first-op-by-position, last-op-by-position,
-        change count) across micro-batches — the arg-min/arg-max fold is
-        ORDER-INDEPENDENT, exactly the batch operator's min_by/max_by —
-        and emit the key's CURRENT net record whenever a batch touches
-        it. The last emission per key equals
-        ``operators/apply_changes.net_changes`` on the drained stream."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "net",
-                "first_op string, first_lsn long, "
-                "last_op string, last_lsn long, n long",
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (k,) = key
-            st = (
-                self._st.get()
-                if self._st.exists()
-                else (None, None, None, None, 0)
-            )
-            first_op, first_lsn, last_op, last_lsn, n = st
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            for op, lsn in zip(pdf["op"], pdf["lsn_long"]):
-                op, lsn = str(op), int(lsn)
-                if first_lsn is None or lsn < first_lsn:
-                    first_op, first_lsn = op, lsn
-                if last_lsn is None or lsn > last_lsn:
-                    last_op, last_lsn = op, lsn
-                n += 1
-            self._st.update(
-                (first_op, int(first_lsn), last_op, int(last_lsn), int(n))
-            )
-            if first_op == "insert" and last_op == "delete":
-                net = "none"
-            elif first_op == "insert":
-                net = "insert"
-            elif last_op == "delete":
-                net = "delete"
-            else:
-                net = "update"
-            yield pd.DataFrame(
-                {
-                    "k": [k],
-                    "net_op": [net],
-                    "n_changes": [int(n)],
-                    "first_lsn_long": [int(first_lsn)],
-                    "last_lsn_long": [int(last_lsn)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return NetChangeMonitor
 
 
 def net_changes_tws(
@@ -1211,7 +406,7 @@ def net_changes_tws(
     op_col: str = "op",
     ord_col: str = "lsn_long",
 ) -> DataFrame:
-    """Streaming twin of ``operators/apply_changes.net_changes`` — the
+    """Streaming form of ``operators/apply_changes.net_changes`` — the
     live net-effect ledger: as the change stream drains, each touched
     key re-emits its current net operation (first insert … last delete
     cancel to ``none``, first insert folds to net ``insert`` of the
@@ -1225,19 +420,16 @@ def net_changes_tws(
     result. Key-change updates must be split upstream (the batch
     operator's tombstone + insert split is a stateless projection);
     input should be pre-filtered to DML rows."""
-    from pyspark.sql import functions as F
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("k"),
         F.col(op_col).alias("op"),
         F.col(ord_col).cast("long").alias("lsn_long"),
     )
-    return keyed.groupBy("k").transformWithStateInPandas(
-        statefulProcessor=_net_monitor_class()(),
-        outputStructType=(
-            "k string, net_op string, n_changes long, "
-            "first_lsn_long long, last_lsn_long long"
-        ),
-        outputMode="append",
-        timeMode="None",
+    return tws_value(
+        keyed, ["k"], folds.net_change_fold,
+        ["k", "net_op", "n_changes", "first_lsn_long", "last_lsn_long"],
+        "k string, net_op string, n_changes long, "
+        "first_lsn_long long, last_lsn_long long",
+        "first_op string, first_lsn long, last_op string, last_lsn long, "
+        "n long",
     )

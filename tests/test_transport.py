@@ -237,6 +237,153 @@ def test_frames_stream_end_to_end(spark, tmp_path):
     assert {bytes(r["payload"]) for r in ws} == {b"payload-1", b"payload-2"}
 
 
+def _streamed_log(d, segments, cut=None):
+    """A pgoutput v2 frame log: R, then streamed txn 500 as ``segments``
+    ('S', one insert per id, 'E'), its stream_commit, and a plain txn
+    600. Only the first ``cut`` frames are written; the rest are
+    returned for the caller to append later."""
+    from pg_logical_replication_spark.sources import pgoutput_format as pf
+
+    oid = 16401
+    msgs = [pf.encode_relation(oid, "public", "t", [("id", 20)], key_columns=["id"])]
+    for n, ids in enumerate(segments):
+        msgs.append(pf.encode_stream_start(500, first_segment=n == 0))
+        msgs += [pf.with_stream_xid(500, pf.encode_insert(oid, [("t", str(i))]))
+                 for i in ids]
+        msgs.append(pf.encode_stream_stop())
+    msgs += [
+        pf.encode_stream_commit(500, "0/9000", "0/9008", 0),
+        pf.encode_begin("0/9100", 0, 600),
+        pf.encode_insert(oid, [("t", "600")]),
+        pf.encode_commit("0/9100", "0/9108", 0),
+    ]
+    frames = [_xlog(0x8000 + 8 * i, m) for i, m in enumerate(msgs)]
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, "000001.seg"), "ab") as f:
+        for fr in frames[:cut]:
+            write_frame(f, fr)
+    return frames[len(frames) if cut is None else cut:]
+
+
+def _gated_rows(spark, log, cp, max_frames, until):
+    """Run the frames source → pgoutput decode → commit gate and collect
+    every delivered row; ``until(rows, query)`` returns True when done."""
+    import time
+
+    from pg_logical_replication_spark.sources.pgoutput import (
+        relations_from_frame_log,
+    )
+    from pg_logical_replication_spark.streaming.service import (
+        LogicalReplicationService,
+    )
+    from pg_logical_replication_spark.streaming.stateful import (
+        resolve_transactions_gate,
+    )
+
+    svc = LogicalReplicationService(spark, log, cp, max_files_per_trigger=max_frames)
+    rels = relations_from_frame_log(spark, log)
+    got = []
+    q = (
+        resolve_transactions_gate(svc.changes("pgoutput", source="frames", relations=rels))
+        .writeStream.foreachBatch(lambda df, _b: got.extend(df.collect()))
+        .option("checkpointLocation", cp)
+        .trigger(processingTime="150 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.time() + 60
+        while not until(got, q) and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        q.stop()
+    return got
+
+
+def _inserts_or_error(n):
+    def until(got, _q):
+        return (sum(r["op"] == "insert" for r in got) >= n
+                or any(r["op"] == "error" for r in got))
+    return until
+
+
+def _committed_ids(rows):
+    assert [r for r in rows if r["op"] == "error"] == []
+    return sorted(int(r["after"]["id"]) for r in rows if r["op"] == "insert")
+
+
+def test_frames_batches_never_end_inside_a_streamed_segment(spark, tmp_path):
+    """Segments of 12 changes under maxFramesPerTrigger=5: each batch
+    takes a whole segment instead of stopping inside it, so no change
+    is decoded out of its segment's context."""
+    from pg_logical_replication_spark.sources.datasource import register
+
+    register(spark)
+    log = str(tmp_path / "wal")
+    _streamed_log(log, [range(0, 12), range(12, 24)])
+    rows = _gated_rows(spark, log, str(tmp_path / "cp"), 5, _inserts_or_error(25))
+    assert _committed_ids(rows) == [*range(24), 600]
+
+
+def test_frames_hold_back_an_unterminated_segment(spark, tmp_path):
+    """A log that ends inside a segment: its frames wait for the 'E';
+    once the rest is appended, every committed change becomes visible
+    and none is decoded as an unseen-relation error."""
+    from pg_logical_replication_spark.sources.datasource import register
+
+    register(spark)
+    log = str(tmp_path / "wal")
+    # R, S, inserts 0-2 logged; inserts 3-5, E and the fates come later
+    rest = _streamed_log(log, [range(6)], cut=5)
+
+    def idle_after_start(_got, q):
+        return len(q.recentProgress) >= 3
+
+    cp = str(tmp_path / "cp")
+    first = _gated_rows(spark, log, cp, None, idle_after_start)
+    with open(os.path.join(log, "000001.seg"), "ab") as f:
+        for fr in rest:
+            write_frame(f, fr)
+    second = _gated_rows(spark, log, cp, None, _inserts_or_error(7))
+    assert _committed_ids(first + second) == [*range(6), 600]
+
+
+def test_batch_and_stream_reads_agree_on_frame_lsns(tmp_path):
+    """One frame→LSN rule for every reader: the batch ``.seg`` scan and
+    the frames stream give the same ``lsn`` per frame, truncated headers
+    (shorter than the protocol's 25-byte 'w' / 18-byte 'k') included."""
+    from pg_logical_replication_spark.sources.datasource import (
+        PgCdcBatchReader,
+        PgCdcFramesStreamReader,
+    )
+
+    d = str(tmp_path / "frames")
+    os.makedirs(d)
+    frames = [
+        _xlog(0x1000, b"payload"),
+        _keepalive(0x1010),
+        _xlog(0x1020, b"")[:20],     # torn 'w' header
+        _keepalive(0x1030)[:12],     # torn 'k'
+        b"x-unknown",
+    ]
+    with open(os.path.join(d, "000001.seg"), "ab") as f:
+        for fr in frames:
+            write_frame(f, fr)
+
+    batch = PgCdcBatchReader({"path": d})
+    batch_lsns = [
+        row[0] for p in batch.partitions() for row in batch.read(p)
+    ]
+    stream = PgCdcFramesStreamReader({"path": d, "autoack": "false"})
+    rows, end = stream.read(stream.initialOffset())
+    stream_lsns = [row[0] for row in rows]
+    replay_lsns = [
+        row[0] for row in stream.readBetweenOffsets(stream.initialOffset(), end)
+    ]
+    assert batch_lsns == stream_lsns == replay_lsns == [
+        "00000000/00001000", "00000000/00001010", None, None, None,
+    ]
+
+
 # ------------------------------------------------------ walsender client
 class _FakePgServer:
     """In-process PostgreSQL-protocol server: startup packet, md5 (or

@@ -147,6 +147,57 @@ def test_tws_agrees_with_apply_in_pandas_with_state(rocksdb, tmp_path):
     assert len(a) == 3
 
 
+def test_assemble_backends_agree_without_seq_or_meta(rocksdb, tmp_path):
+    """Input with neither ``seq`` nor ``meta`` (a bare ChangeEvent
+    projection): both backends run the one input projection, ordering
+    by lsn_long with seq 0, instead of the aip form failing analysis."""
+    import pyspark.sql.functions as F
+
+    from pg_logical_replication_spark.streaming.stateful import (
+        assemble_transactions_stream,
+    )
+    from pg_logical_replication_spark.streaming.tws import (
+        assemble_transactions_tws,
+    )
+
+    spark = rocksdb
+    schema = EVENT_SCHEMA.replace("seq long, ", "")
+    src = tmp_path / "src"; src.mkdir()
+    batches = [
+        [_ev("begin", 0x100, 0, 1),
+         _ev("insert", 0x102, 0, 1, "users", {"id": "2", "v": "b"})],
+        [_ev("insert", 0x101, 0, 1, "users", {"id": "1", "v": "a"}),
+         _ev("commit", 0x103, 0, 1, commit_ts="2026-08-13 00:00:05.000000")],
+    ]
+    for i, batch in enumerate(batches):
+        with open(src / f"{i:03d}.jsonl", "w") as f:
+            for e in batch:
+                e.pop("seq")
+                f.write(json.dumps(e) + "\n")
+
+    def run(op, name):
+        raw = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+            .withColumn("commit_ts", F.to_timestamp("commit_ts"))
+        )
+        q = (
+            op(raw).writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", str(tmp_path / name))
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        return [
+            (r["lsn_long"], r["seq"], r["after"]["v"])
+            for r in spark.sql(f"select * from {name}").collect()
+        ]
+
+    aip = run(assemble_transactions_stream, "noseq_aip")
+    tws = run(assemble_transactions_tws, "noseq_tws")
+    assert aip == tws == [(0x101, 0, "a"), (0x102, 0, "b")]
+
+
 def test_toast_fill_tws_agrees_with_apply_in_pandas(rocksdb, tmp_path):
     """Both stateful backends fill identically: cross-batch TOAST fill,
     explicit NULL overwrite, NULL never resurrected."""
