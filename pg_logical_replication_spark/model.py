@@ -129,16 +129,6 @@ def lsn_str_expr(lsn_long_col: str | Column = "lsn_long") -> Column:
     )
 
 
-# PostgreSQL epoch (2000-01-01) offset from Unix epoch, in microseconds.
-# pgoutput timestamps are µs since PG epoch (binary-reader.ts:88-95).
-PG_EPOCH_OFFSET_US = 946_684_800_000_000
-
-
-def pg_time_to_timestamp(us_col: Column) -> Column:
-    """µs-since-PG-epoch (int) → Spark TimestampType (µs precision)."""
-    return F.timestamp_micros(us_col.cast("long") + F.lit(PG_EPOCH_OFFSET_US))
-
-
 # Map a PostgreSQL type name (as carried in wal2json columntypes /
 # test_decoding brackets) to the Spark type used by `typed_view`.
 _PG_TO_SPARK: dict[str, str] = {

@@ -92,7 +92,12 @@ def latest_image(
     ev = events
     if table is not None:
         ev = ev.filter(F.col("table") == table)
-    ev = ev.filter(F.col("op").isin("insert", "update", "delete", "truncate"))
+    # with no_truncates the barrier is skipped, but truncate rows are
+    # still dropped here: a mis-asserted flag must not leak them as data
+    ops = ["insert", "update", "delete"]
+    if not no_truncates:
+        ops.append("truncate")
+    ev = ev.filter(F.col("op").isin(*ops))
     ev = ev.withColumn("_ord", order if order is not None else _order_col(ev))
 
     # Truncate barrier: events at-or-before the newest truncate OF THE
@@ -562,13 +567,7 @@ def net_changes(
 
     # key-change updates split exactly as latest_image splits them: the
     # old identity nets a delete, the new identity an upsert
-    old_identity = F.array(*[F.col("key").getItem(k) for k in key_columns])
-    new_identity = F.array(*[F.col("after").getItem(k) for k in key_columns])
-    key_changed = (
-        (F.col("op") == "update")
-        & F.col("key").isNotNull()
-        & ~old_identity.eqNullSafe(new_identity)
-    )
+    key_changed = key_change_predicate(key_columns)
     tombstones = (
         dml.filter(key_changed)
         .withColumn("op", F.lit("delete"))

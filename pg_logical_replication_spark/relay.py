@@ -1,16 +1,18 @@
-"""The relay process: one replication slot → one durable frame log.
+"""The relay process: replication slots → durable frame logs.
 
 Deployment shape (SCALE.md 'Transport ingest is serial BY DESIGN'): this
 process owns the single ordered walsender connection the protocol
-allows, appends raw COPY frames to the segment log Spark tails
+allows per slot, appends raw COPY frames to the segment log Spark tails
 (``pg_cdc`` ``transport=frames`` / ``subscribe(source='frames')``), and
 forwards the Standby Status Updates Spark's checkpoint commits append to
 ``status.log`` back up the live connection — closing the slot-advance
-loop end-to-end. Run one relay per slot, anywhere the PG endpoint is
-reachable; Spark scale-out happens downstream of the log.
+loop end-to-end. Spark scale-out happens downstream of the log.
 
-``run_relay`` is the loop (testable against the in-process fake PG
-server); the ``__main__`` CLI wires it to a real endpoint::
+One relay step (:class:`_SlotRelay`) serves every slot: poll, append,
+forward recorded acks, re-ack on the status timer. One loop
+(:func:`_relay`) drives a set of steps; :func:`run_relay` is its
+one-slot case and :func:`run_multi_relay` its N-slot case. The
+``__main__`` CLI wires either to a real endpoint::
 
     python -m pg_logical_replication_spark.relay \\
         --host pg --port 5432 --user rep --database app \\
@@ -20,9 +22,134 @@ server); the ``__main__`` CLI wires it to a real endpoint::
 
 from __future__ import annotations
 
+import os
 import time
 
-from pg_logical_replication_spark.sources.transport import WalTransport
+from pg_logical_replication_spark.model import ack_lsn, long_to_lsn
+from pg_logical_replication_spark.sources.transport import (
+    FrameLogWriter,
+    WalsenderTransport,
+    WalTransport,
+    last_logged_lsn,
+    read_statuses_since,
+)
+
+
+class _SlotRelay:
+    """One slot's relay state: its transport, its frame-log writer and
+    its ``status.log`` read cursor."""
+
+    def __init__(
+        self,
+        name: str,
+        transport: WalTransport,
+        log_dir: str,
+        segment_frames: int,
+        rotate_bytes: int,
+    ):
+        self.name = name
+        self.transport = transport
+        self.log_dir = log_dir
+        self.segment_frames = segment_frames
+        self.writer = FrameLogWriter(
+            log_dir, segment_frames=segment_frames, rotate_bytes=rotate_bytes
+        )
+        self.ack_off = 0
+        self.last_flushed: int | None = None
+        self.last_status = time.monotonic()
+        self.total = 0
+
+    def forward_acks(self) -> bool:
+        """Send the statuses recorded since the last call upstream —
+        O(new acks). Returns whether any went."""
+        statuses, self.ack_off = read_statuses_since(self.log_dir, self.ack_off)
+        for s in statuses:
+            # re-send at the recorded position (standby_status_frame
+            # re-applies +1, so step back one byte)
+            self.transport.send_standby_status(
+                long_to_lsn(s["flushed"] - 1), ping=s["ping"]
+            )
+        if statuses:
+            self.last_flushed = statuses[-1]["flushed"]
+        return bool(statuses)
+
+    def step(self, status_interval: float) -> int:
+        """Poll, append, forward acks; returns the frames written."""
+        wrote = self.writer.append(
+            self.transport.poll(max_frames=self.segment_frames)
+        )
+        self.total += wrote
+        now = time.monotonic()
+        due = now - self.last_status >= status_interval
+        if wrote or due:
+            sent = self.forward_acks()
+            if not sent and due:
+                # No downstream ack progress within the interval —
+                # whether the relay is idle OR under sustained traffic
+                # with a lagging/absent consumer: re-ack the last
+                # recorded position so wal_sender_timeout (default 60s)
+                # never fires (reference :238-247 re-acks on every
+                # timer expiry regardless of traffic); zero-position
+                # keepalive before any ack.
+                self.transport.send_standby_status(
+                    long_to_lsn(self.last_flushed - 1)
+                    if self.last_flushed is not None
+                    else "0/00000000"
+                )
+            if sent or due:
+                # last_status tracks when a Standby Status Update
+                # actually went upstream — resetting it on mere frame
+                # traffic starved the keepalive under load.
+                self.last_status = now
+        return wrote
+
+
+def _relay(
+    slots: list[_SlotRelay],
+    poll_interval: float,
+    status_interval: float,
+    stop_after_frames: int | None,
+    stop_after_seconds: float | None,
+    isolate_errors: bool = False,
+    failures: dict[str, str] | None = None,
+) -> None:
+    """Round-robin ``slots`` until a stop condition, then flush acks.
+
+    Transports are non-blocking, so one thread is the whole scheduler:
+    no slot can starve another for longer than one drain.
+    ``stop_after_frames`` bounds the total across slots."""
+    live = list(slots)
+    started = time.monotonic()
+    while True:
+        wrote = 0
+        for s in list(live):
+            try:
+                wrote += s.step(status_interval)
+            except (ConnectionError, OSError) as e:
+                if not isolate_errors:
+                    raise
+                # one dead slot must not take down the others:
+                # everything relayed so far is already durable in its
+                # frame log; record and stop polling this slot only
+                if failures is not None:
+                    failures[s.name] = f"{type(e).__name__}: {e}"
+                live.remove(s)
+        if stop_after_frames is not None and (
+            sum(s.total for s in slots) >= stop_after_frames
+        ):
+            break
+        if (
+            stop_after_seconds is not None
+            and time.monotonic() - started >= stop_after_seconds
+        ):
+            break
+        if not live:
+            break  # every slot failed: nothing left to poll
+        if not wrote:
+            time.sleep(poll_interval)
+    # final ack flush so a drain-style run leaves nothing behind
+    for s in live:
+        s.forward_acks()
 
 
 def run_relay(
@@ -53,76 +180,17 @@ def run_relay(
       ``wal_sender_timeout``;
     * ``stop_after_frames`` / ``stop_after_seconds`` bound the loop for
       tests and drain-style invocations; with neither, runs forever.
+      ``stop_after_seconds=0`` makes one pass: poll and append once,
+      then forward every recorded ack.
 
     Returns the total frame count relayed.
     """
-    from pg_logical_replication_spark.model import long_to_lsn
-    from pg_logical_replication_spark.sources.transport import (
-        FrameLogWriter,
-        read_statuses_since,
+    slot = _SlotRelay("", transport, log_dir, segment_frames, rotate_bytes)
+    _relay(
+        [slot], poll_interval, status_interval,
+        stop_after_frames, stop_after_seconds,
     )
-
-    writer = FrameLogWriter(
-        log_dir, segment_frames=segment_frames, rotate_bytes=rotate_bytes
-    )
-
-    def forward(transport, log_dir, byte_off, last_flushed):
-        """Incremental ack forward: O(new acks) per interval."""
-        statuses, byte_off = read_statuses_since(log_dir, byte_off)
-        for s in statuses:
-            # re-send at the recorded position (frame builder re-applies
-            # +1, so step back one byte — same rule as
-            # forward_acks_upstream)
-            transport.send_standby_status(
-                long_to_lsn(s["flushed"] - 1), ping=s["ping"]
-            )
-        if statuses:
-            last_flushed = statuses[-1]["flushed"]
-        return byte_off, last_flushed
-
-    total = 0
-    ack_off = 0
-    last_flushed: int | None = None
-    last_status = time.monotonic()
-    started = time.monotonic()
-    while True:
-        wrote = writer.append(transport.poll(max_frames=segment_frames))
-        total += wrote
-        now = time.monotonic()
-        if wrote or now - last_status >= status_interval:
-            prev_off = ack_off
-            ack_off, last_flushed = forward(
-                transport, log_dir, ack_off, last_flushed
-            )
-            sent = ack_off != prev_off
-            if not sent and now - last_status >= status_interval:
-                # No downstream ack progress within the interval —
-                # whether the relay is idle OR under sustained traffic
-                # with a lagging/absent consumer: re-ack the last
-                # recorded position so wal_sender_timeout (default 60s)
-                # never fires (reference :238-247 re-acks on every
-                # timer expiry regardless of traffic); zero-position
-                # keepalive before any ack.
-                transport.send_standby_status(
-                    long_to_lsn(last_flushed - 1)
-                    if last_flushed is not None
-                    else "0/00000000"
-                )
-                sent = True
-            if sent:
-                # last_status tracks when a Standby Status Update
-                # actually went upstream — resetting it on mere frame
-                # traffic starved the keepalive under load.
-                last_status = now
-        if stop_after_frames is not None and total >= stop_after_frames:
-            break
-        if stop_after_seconds is not None and now - started >= stop_after_seconds:
-            break
-        if not wrote:
-            time.sleep(poll_interval)
-    # final ack flush so a drain-style run leaves nothing behind
-    forward(transport, log_dir, ack_off, last_flushed)
-    return total
+    return slot.total
 
 
 def run_multi_relay(
@@ -145,14 +213,11 @@ def run_multi_relay(
     runner drives them all from a single loop, each slot landing in its
     own segment directory ``<base_dir>/<name>/`` with an INDEPENDENT
     frame-log writer and ack cursor (one Spark session then tails N
-    directories as N sources). Transports are non-blocking, so a
-    round-robin poll in one thread is the whole scheduler — no slot can
-    starve another for longer than one drain.
+    directories as N sources). Per-slot rotation, resume and re-ack are
+    :func:`run_relay`'s, because both run the same step.
 
     ``stop_after_frames`` bounds the TOTAL across slots (a drain-style
-    invocation); per-slot resume/rotation semantics match
-    :func:`run_relay` exactly, including the idle keepalive re-ack.
-    Returns per-slot relayed frame counts.
+    invocation). Returns per-slot relayed frame counts.
 
     ``isolate_errors=True`` keeps the other N-1 slots flowing when one
     transport dies (ConnectionError/OSError): the failed slot stops
@@ -163,99 +228,21 @@ def run_multi_relay(
     halting the queue. Default remains fail-fast (raise), the right
     behavior when a supervisor owns restarts.
     """
-    import os
-
-    from pg_logical_replication_spark.model import long_to_lsn
-    from pg_logical_replication_spark.sources.transport import (
-        FrameLogWriter,
-        read_statuses_since,
+    slots = [
+        _SlotRelay(
+            name, t, os.path.join(base_dir, name), segment_frames, rotate_bytes
+        )
+        for name, t in transports.items()
+    ]
+    _relay(
+        slots, poll_interval, status_interval,
+        stop_after_frames, stop_after_seconds, isolate_errors, failures,
     )
-
-    class _Slot:
-        def __init__(self, name: str, transport: WalTransport):
-            self.name = name
-            self.transport = transport
-            self.dir = os.path.join(base_dir, name)
-            self.writer = FrameLogWriter(
-                self.dir,
-                segment_frames=segment_frames,
-                rotate_bytes=rotate_bytes,
-            )
-            self.ack_off = 0
-            self.last_flushed: int | None = None
-            self.last_status = time.monotonic()
-            self.total = 0
-
-        def forward(self) -> bool:
-            statuses, self.ack_off = read_statuses_since(
-                self.dir, self.ack_off
-            )
-            for st in statuses:
-                self.transport.send_standby_status(
-                    long_to_lsn(st["flushed"] - 1), ping=st["ping"]
-                )
-            if statuses:
-                self.last_flushed = statuses[-1]["flushed"]
-            return bool(statuses)
-
-    slots = [_Slot(n, t) for n, t in transports.items()]
-    live = list(slots)
-    started = time.monotonic()
-    while True:
-        any_wrote = False
-        for s in list(live):
-            try:
-                wrote = s.writer.append(
-                    s.transport.poll(max_frames=segment_frames)
-                )
-                s.total += wrote
-                any_wrote = any_wrote or wrote > 0
-                now = time.monotonic()
-                if wrote or now - s.last_status >= status_interval:
-                    forwarded = s.forward()
-                    if not forwarded and now - s.last_status >= status_interval:
-                        # keepalive re-ack, per slot — fires on the timer
-                        # whether the slot is idle or its consumer lags
-                        # (same fix as run_relay: traffic alone must not
-                        # starve the Standby Status Update)
-                        s.transport.send_standby_status(
-                            long_to_lsn(s.last_flushed - 1)
-                            if s.last_flushed is not None
-                            else "0/00000000"
-                        )
-                        forwarded = True
-                    if forwarded:
-                        s.last_status = now
-            except (ConnectionError, OSError) as e:
-                if not isolate_errors:
-                    raise
-                # one dead slot must not take down the other N-1:
-                # everything relayed so far is already durable in its
-                # frame log; record and stop polling this slot only
-                if failures is not None:
-                    failures[s.name] = f"{type(e).__name__}: {e}"
-                live.remove(s)
-        total = sum(s.total for s in slots)
-        now = time.monotonic()
-        if stop_after_frames is not None and total >= stop_after_frames:
-            break
-        if stop_after_seconds is not None and now - started >= stop_after_seconds:
-            break
-        if not live:
-            break  # every slot failed: nothing left to poll
-        if not any_wrote:
-            time.sleep(poll_interval)
-    for s in live:
-        s.forward()
     return {s.name: s.total for s in slots}
 
 
 def main(argv: list[str] | None = None) -> int:
     import argparse
-
-    from pg_logical_replication_spark.sources.transport import (
-        WalsenderTransport,
-    )
 
     p = argparse.ArgumentParser(
         description="Relay one PostgreSQL logical-replication slot into a "
@@ -297,8 +284,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    import os
-
     options = dict(kv.split("=", 1) for kv in args.option)
 
     def connect(slot: str, log_dir: str) -> WalsenderTransport:
@@ -310,11 +295,6 @@ def main(argv: list[str] | None = None) -> int:
             t.create_replication_slot(slot, plugin=args.plugin)
         start_lsn = args.start_lsn
         if args.resume:
-            from pg_logical_replication_spark.model import ack_lsn
-            from pg_logical_replication_spark.sources.transport import (
-                last_logged_lsn,
-            )
-
             logged = last_logged_lsn(log_dir)
             if logged is not None:
                 # the byte after the last durable frame
@@ -322,37 +302,23 @@ def main(argv: list[str] | None = None) -> int:
         t.start_replication(slot, start_lsn, options=options, plugin=args.plugin)
         return t
 
-    if len(args.slot) == 1:
-        t = connect(args.slot[0], args.log_dir)
-        try:
-            run_relay(
-                t,
-                args.log_dir,
-                poll_interval=args.poll_interval,
-                status_interval=args.status_interval,
-                segment_frames=args.segment_frames,
-                rotate_bytes=args.rotate_bytes,
-            )
-        finally:
-            t.close()
-        return 0
-
-    transports = {
-        slot: connect(slot, os.path.join(args.log_dir, slot))
-        for slot in args.slot
-    }
+    # one slot relays into --log-dir itself, several into <log-dir>/<slot>/
+    dirs = (
+        {args.slot[0]: args.log_dir}
+        if len(args.slot) == 1
+        else {slot: os.path.join(args.log_dir, slot) for slot in args.slot}
+    )
+    slots: list[_SlotRelay] = []
     try:
-        run_multi_relay(
-            transports,
-            args.log_dir,
-            poll_interval=args.poll_interval,
-            status_interval=args.status_interval,
-            segment_frames=args.segment_frames,
-            rotate_bytes=args.rotate_bytes,
-        )
+        for slot, log_dir in dirs.items():
+            slots.append(_SlotRelay(
+                slot, connect(slot, log_dir), log_dir,
+                args.segment_frames, args.rotate_bytes,
+            ))
+        _relay(slots, args.poll_interval, args.status_interval, None, None)
     finally:
-        for t in transports.values():
-            t.close()
+        for s in slots:
+            s.transport.close()
     return 0
 
 

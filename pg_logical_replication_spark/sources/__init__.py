@@ -47,10 +47,7 @@ from pg_logical_replication_spark.sources.transport import (  # noqa: F401
     WalTransport,
     copy_in,
     copy_out,
-    forward_acks_upstream,
     read_statuses_since,
-    relay_to_frame_log,
-    resend_last_status,
 )
 from pg_logical_replication_spark.sources.bootstrap import (  # noqa: F401
     bootstrap_events,

@@ -37,10 +37,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Completion marker for bootstrap_to_frame_log: present in the log dir
-# only after EVERY bootstrap segment is renamed into place. Not a .seg
-# name, so the frame-log tailer never reads it.
-BOOTSTRAP_DONE_MARKER = "000000.bootstrap.done"
+from pg_logical_replication_spark.sources.transport import (
+    BOOTSTRAP_DONE_MARKER,
+    write_frame,
+)
 
 #: placeholder for '\\' during escape folding: SOH never occurs in
 #: COPY text output (control chars are escaped by the server)
@@ -192,13 +192,14 @@ def bootstrap_to_frame_log(
     partition writes its own segment, so the write parallelizes across
     executors onto the shared log directory. Returns rows written.
 
-    Crash safety (ADVICE r5): partitions write ``*.seg.tmp`` names the
-    tailer ignores; only after EVERY partition succeeds does the driver
-    rename them into place and drop the ``BOOTSTRAP_DONE_MARKER`` file.
+    Crash safety (ADVICE r5): partitions write ``*.seg.tmp`` files,
+    which no reader lists (``transport.list_segments`` skips ``*.tmp``
+    and the marker); only after EVERY partition succeeds does the calling
+    process rename them into place and drop the ``BOOTSTRAP_DONE_MARKER`` file.
     A crash mid-write therefore leaves no visible ``.seg`` and no
     marker — the next subscribe sees an incomplete load and re-runs it
     instead of silently streaming from partial initial state."""
-    import struct as st
+    import struct
 
     from pg_logical_replication_spark.model import lsn_to_long
 
@@ -224,6 +225,8 @@ def bootstrap_to_frame_log(
     ).alias("value")
     rendered = snapshot.select(payload)
     lsn_long = lsn_to_long(lsn)
+    # 'w' XLogData header: walStart = walEnd = the consistent point
+    header = b"w" + struct.pack(">QQQ", lsn_long, lsn_long, 0)
     os.makedirs(log_dir, exist_ok=True)
 
     def write_part(idx, it):
@@ -234,9 +237,7 @@ def bootstrap_to_frame_log(
             for row in it:
                 if fh is None:  # no file for empty partitions
                     fh = open(os.path.join(log_dir, name + ".tmp"), "wb")
-                pl = row["value"].encode()
-                frame = b"w" + st.pack(">QQQ", lsn_long, lsn_long, 0) + pl
-                fh.write(st.pack(">I", len(frame)) + frame)
+                write_frame(fh, header + row["value"].encode())
                 wrote += 1
         finally:
             if fh is not None:

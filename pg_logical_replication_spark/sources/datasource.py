@@ -43,7 +43,6 @@ offset stays O(1) regardless of history length.
 from __future__ import annotations
 
 import os
-import struct
 from collections.abc import Iterator
 from typing import Tuple
 
@@ -60,29 +59,18 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from pg_logical_replication_spark.model import long_to_lsn
+from pg_logical_replication_spark.sources.transport import (
+    KEEPALIVE_SIZE,
+    XLOG_HEADER,
+    FrameLogTailTransport,
+    frame_lsn,
+    list_segments,
+    split_frames,
+)
 
 RAW_SCHEMA = "lsn string, seq long, value string, data binary"
 
 _SEQ_SHIFT = 32  # seq = (file_index << 32) | row_in_file
-
-# COPY-both frame sizes of the streaming replication protocol: 'w'
-# XLogData header = tag + walStart + walEnd + sendTime; 'k' keepalive =
-# tag + walEnd + sendTime + replyRequested
-_XLOG_HEADER = 25
-_KEEPALIVE = 18
-
-
-def _frame_lsn(frame: bytes) -> str | None:
-    """The LSN a COPY frame carries ('w' walStart, 'k' walEnd), or None
-    for any other or truncated frame."""
-    tag = frame[:1]
-    if (tag == b"w" and len(frame) >= _XLOG_HEADER) or (
-        tag == b"k" and len(frame) >= _KEEPALIVE
-    ):
-        return long_to_lsn(struct.unpack_from(">Q", frame, 1)[0])
-    return None
-
 
 def _segment_edge(frame: bytes) -> int:
     """+1 for a pgoutput Stream Start ('S' + xid + first-segment flag),
@@ -90,7 +78,7 @@ def _segment_edge(frame: bytes) -> int:
     sizes keep other formats' payloads (JSON, text, protobuf) out."""
     if frame[:1] != b"w":
         return 0
-    size, tag = len(frame) - _XLOG_HEADER, frame[_XLOG_HEADER:_XLOG_HEADER + 1]
+    size, tag = len(frame) - XLOG_HEADER, frame[XLOG_HEADER:XLOG_HEADER + 1]
     if size == 6 and tag == b"S":
         return 1
     return -1 if size == 1 and tag == b"E" else 0
@@ -117,25 +105,6 @@ def _batch_end(frames: list[bytes], limit: int | None) -> int:
     return end
 
 
-def _list_log_files(path: str) -> list[str]:
-    """Sorted event-log segment files (name order == stream order).
-
-    ``status.log`` is the ack side-channel the frames transport appends
-    (``FrameLogTailTransport.STATUS_FILE``) — data for the relay, never
-    a segment, skipped here exactly like the tailer skips it."""
-    try:
-        names = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        n
-        for n in names
-        if not n.startswith((".", "_"))
-        and n != "status.log"
-        and os.path.isfile(os.path.join(path, n))
-    )
-
-
 def _read_file(path: str, file_index: int) -> Iterator[Tuple]:
     """One log segment → raw rows ``(lsn, seq, value, data)``.
 
@@ -150,13 +119,11 @@ def _read_file(path: str, file_index: int) -> Iterator[Tuple]:
     """
     base = file_index << _SEQ_SHIFT
     if path.endswith(".seg"):
-        from pg_logical_replication_spark.sources.transport import _read_frames
-
         with open(path, "rb") as f:
             buf = f.read()
-        frames, _pos = _read_frames(buf, 0, None)
+        frames, _pos = split_frames(buf, 0, None)
         for i, frame in enumerate(frames):
-            yield (_frame_lsn(frame), base | i, None, frame)
+            yield (frame_lsn(frame), base | i, None, frame)
     elif path.endswith(".parquet"):
         import pyarrow.parquet as pq
 
@@ -249,7 +216,7 @@ class PgCdcBatchReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         return [
             _LogFilePartition(i, os.path.join(self.path, name))
-            for i, name in enumerate(_list_log_files(self.path))
+            for i, name in enumerate(list_segments(self.path))
             if self.range.file_alive(i)
         ]
 
@@ -271,7 +238,7 @@ class PgCdcStreamReader(SimpleDataSourceStreamReader):
         return {"last_file": ""}
 
     def _pending(self, after: str) -> list[tuple[int, str]]:
-        files = _list_log_files(self.path)
+        files = list_segments(self.path)
         return [(i, n) for i, n in enumerate(files) if n > after]
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
@@ -339,11 +306,7 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         self.max_frames = int(options.get("maxframespertrigger", 0)) or None
         self.auto_ack = options.get("autoack", "true").lower() != "false"
 
-    def _transport(self, position: dict):
-        from pg_logical_replication_spark.sources.transport import (
-            FrameLogTailTransport,
-        )
-
+    def _transport(self, position: dict) -> FrameLogTailTransport:
         return FrameLogTailTransport(self.path, position=position)
 
     def initialOffset(self) -> dict:
@@ -373,10 +336,10 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         last_lsn = start.get("lsn")
         rows = []
         for frame in frames:
-            lsn = _frame_lsn(frame)
+            lsn = frame_lsn(frame)
             if lsn:
                 last_lsn = lsn
-                if frame[:1] == b"k" and frame[_KEEPALIVE - 1]:
+                if frame[:1] == b"k" and frame[KEEPALIVE_SIZE - 1]:
                     # shouldRespond: answer NOW with a ping status update
                     t.send_standby_status(lsn, ping=True)
             rows.append((lsn, seq, None, frame))
@@ -393,7 +356,7 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         seq = int(start.get("frames", 0))
         budget = int(end.get("frames", 0)) - seq
         for frame in t.poll(max(budget, 0)):
-            yield (_frame_lsn(frame), seq, None, frame)
+            yield (frame_lsn(frame), seq, None, frame)
             seq += 1
 
     def commit(self, end: dict) -> None:

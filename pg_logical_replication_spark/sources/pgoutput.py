@@ -24,6 +24,7 @@ with ``seq <= its own seq``.
 from __future__ import annotations
 
 import bisect
+import numbers
 from collections.abc import Iterator
 from typing import Any
 
@@ -82,6 +83,28 @@ def _collect_relations(
         for oid, info in tmp.items():
             cache.setdefault(oid, []).append((row[seq_col], info))
     return cache
+
+
+def _registry_versions(oid, entry) -> list[tuple[int, fmt.RelationInfo]]:
+    """One ``relations=`` entry → its version list: a RelationInfo
+    (valid from the start) or a list/tuple of ``(valid_from_seq,
+    RelationInfo)`` pairs. Any other shape raises here, before any Spark
+    job runs, instead of failing inside the decode worker."""
+    if isinstance(entry, fmt.RelationInfo):
+        return [(-1, entry)]
+    if isinstance(entry, (list, tuple)) and all(
+        isinstance(v, (list, tuple))
+        and len(v) == 2
+        and isinstance(v[0], numbers.Integral)
+        and isinstance(v[1], fmt.RelationInfo)
+        for v in entry
+    ):
+        return [tuple(v) for v in entry]
+    raise TypeError(
+        f"decode_pgoutput: relations[{oid!r}] must be a RelationInfo or a "
+        "list/tuple of (valid_from_seq, RelationInfo) versions, got "
+        f"{type(entry).__name__}: {entry!r:.200}"
+    )
 
 
 class _VersionedRelations(dict):
@@ -161,8 +184,8 @@ def decode_pgoutput(
     ``relations`` optionally supplies the relation cache up front
     (oid → RelationInfo, e.g. from a schema registry / separate control
     stream). A VERSIONED registry — oid → [(valid_from_seq,
-    RelationInfo), ...], seq-ascending, exactly the pre-scan's own
-    shape — is also accepted, for callers that know the stream's
+    RelationInfo), ...] (a list or a tuple), seq-ascending, exactly the
+    pre-scan's own shape — is also accepted, for callers that know the stream's
     mid-stream ALTER positions (a schema registry with history, or a
     fixture that synthesized the wire itself): rows then decode under
     the newest supplied schema at or below their seq, identical to
@@ -174,8 +197,7 @@ def decode_pgoutput(
     """
     if relations is not None:
         versions = {
-            oid: (list(v) if isinstance(v, list) else [(-1, v)])
-            for oid, v in relations.items()
+            oid: _registry_versions(oid, v) for oid, v in relations.items()
         }
     elif raw.isStreaming:
         # a streaming plan cannot run the pre-scan (it is a batch

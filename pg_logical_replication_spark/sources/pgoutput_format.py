@@ -25,8 +25,7 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
-# PG epoch (2000-01-01) − Unix epoch (1970-01-01), in microseconds.
-PG_EPOCH_OFFSET_US = 946_684_800_000_000
+from pg_logical_replication_spark.sources.transport import PG_EPOCH_OFFSET_US
 
 # precompiled for the tuple-decode hot loop (no slice temporaries)
 _UNPACK_U32 = struct.Struct(">I").unpack_from

@@ -1,4 +1,4 @@
-"""Pluggable WAL transports for the ``pg_cdc`` streaming source.
+"""Pluggable WAL transports, the durable frame log and its one layout.
 
 The reference's product core is a walsender client
 (``src/logical-replication-service.ts:70-87`` connect / ``:126-185``
@@ -12,24 +12,30 @@ TCP relay, an append-only frame log — is the implementation's business,
 and ``sources/wire.py:demux_copy_stream`` stays the downstream parser
 either way.
 
-Three implementations:
+Transports:
 
-* :class:`FrameLogTailTransport` — tails a directory of append-only
-  segment files of u32-length-prefixed frames, with INCREMENTAL byte
-  offsets (a growing segment becomes visible frame-by-frame, not
-  file-by-file). Status updates append to ``status.log`` in the same
-  framing, so tests (and ops) can audit exactly what would have been
-  sent to the server. This is the durable-relay deployment shape and
-  the default behind the ``pg_cdc`` source's ``transport=frames``.
-* :class:`SocketFrameTransport` — the same contract over a real TCP
-  socket with identical length-prefixed framing both directions (a
-  frame relay, no PG semantics).
 * :class:`WalsenderTransport` — the real thing: the PostgreSQL v3 wire
-  protocol (startup packet with ``replication=database``, trust/
-  cleartext/md5 auth, ``START_REPLICATION SLOT … LOGICAL`` via simple
-  Query, CopyBoth streaming, ErrorResponse surfacing), reimplemented
-  from the public protocol documentation and exercised against an
-  in-process fake server in tests (the sandbox ships no PostgreSQL).
+  protocol (startup packet with ``replication=database``, TLS, trust/
+  cleartext/md5/SCRAM auth, ``START_REPLICATION SLOT … LOGICAL`` via
+  simple Query, CopyBoth streaming, ErrorResponse surfacing),
+  reimplemented from the public protocol documentation. Tests drive it
+  against an in-process fake server (tests/test_transport.py) and
+  against a real PostgreSQL (tests/test_live_pg.py).
+* :class:`FrameLogTailTransport` — tails the durable frame log with
+  INCREMENTAL byte offsets (a growing segment becomes visible
+  frame-by-frame, not file-by-file). Status updates append to
+  ``status.log``, which ``relay.py`` forwards upstream. This is the
+  default behind the ``pg_cdc`` source's ``transport=frames``.
+* :class:`SocketFrameTransport` — the same frame contract over a TCP
+  socket, length-prefixed both directions (a frame relay, no PG
+  semantics).
+
+The frame log itself is written by :class:`FrameLogWriter` (driven by
+``relay.run_relay``) and read by the tailer, the ``pg_cdc`` batch and
+stream readers and ``last_logged_lsn``. Its layout — which files are
+segments, the length prefix, the 'w'/'k' header sizes, the LSN word and
+the PG epoch — is defined once, in the section below, and every other
+module imports it.
 
 Scale note: one replication slot is ONE ordered connection (the
 reference is a single-socket client too) — transport ingest is
@@ -46,11 +52,89 @@ import struct
 import time
 from abc import ABC, abstractmethod
 
-from pg_logical_replication_spark.model import ack_lsn, lsn_to_long
+from pg_logical_replication_spark.model import ack_lsn, long_to_lsn, lsn_to_long
 
+# ------------------------------------------------------ frame-log layout
+# A frame log is a directory of segment files read in name order, each a
+# run of u32-length-prefixed COPY frames, beside ``status.log``: the
+# Standby Status Updates the reader records, in the same framing.
+
+#: µs between the unix epoch and PostgreSQL's 2000-01-01 epoch
 PG_EPOCH_OFFSET_US = 946_684_800_000_000
+#: 'w' XLogData header: tag + walStart + walEnd + sendTime
+XLOG_HEADER = 25
+#: 'k' Primary Keepalive: tag + walEnd + sendTime + replyRequested
+KEEPALIVE_SIZE = 18
+STATUS_FILE = "status.log"
+#: written by ``bootstrap_to_frame_log`` only after every bootstrap
+#: segment is renamed into place
+BOOTSTRAP_DONE_MARKER = "000000.bootstrap.done"
+
+_LENGTH = struct.Struct(">I")
 
 
+def list_segments(path: str) -> list[str]:
+    """Segment file names of a log directory, in stream (name) order.
+
+    Skips hidden and ``_``-prefixed files, ``status.log``, the bootstrap
+    completion marker and ``*.tmp`` files: a bootstrap partition writes
+    ``<segment>.tmp`` and only renames it into place once every
+    partition has succeeded."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        n
+        for n in names
+        if not n.startswith((".", "_"))
+        and not n.endswith(".tmp")
+        and n not in (STATUS_FILE, BOOTSTRAP_DONE_MARKER)
+        and os.path.isfile(os.path.join(path, n))
+    )
+
+
+def split_frames(buf: bytes, pos: int, max_frames: int | None):
+    """Length-prefixed frame splitter: returns (frames, new_pos).
+
+    Stops cleanly before a partial frame (a writer caught mid-append) —
+    the incremental-offset contract.
+    """
+    frames: list[bytes] = []
+    n = len(buf)
+    # bound checked at loop top: max_frames=0 must read NOTHING (the
+    # replay reader passes a zero budget to mean exactly that)
+    while pos + 4 <= n and (max_frames is None or len(frames) < max_frames):
+        (ln,) = _LENGTH.unpack_from(buf, pos)
+        if pos + 4 + ln > n:
+            break  # partial tail — wait for the writer
+        frames.append(buf[pos + 4 : pos + 4 + ln])
+        pos += 4 + ln
+    return frames, pos
+
+
+def frame_record(frame: bytes) -> bytes:
+    """One frame with its u32 length prefix (the segment/relay framing)."""
+    return _LENGTH.pack(len(frame)) + frame
+
+
+def write_frame(fh, frame: bytes) -> None:
+    """Append one length-prefixed frame to an open file."""
+    fh.write(frame_record(frame))
+
+
+def frame_lsn(frame: bytes) -> str | None:
+    """The LSN a COPY frame carries ('w' walStart, 'k' walEnd), or None
+    for any other or truncated frame."""
+    tag = frame[:1]
+    if (tag == b"w" and len(frame) >= XLOG_HEADER) or (
+        tag == b"k" and len(frame) >= KEEPALIVE_SIZE
+    ):
+        return long_to_lsn(struct.unpack_from(">Q", frame, 1)[0])
+    return None
+
+
+# ------------------------------------------------------ status frames
 def standby_status_frame(
     lsn: str, ping: bool = False, now_us: int | None = None
 ) -> bytes:
@@ -103,30 +187,6 @@ class WalTransport(ABC):
         pass
 
 
-def _read_frames(buf: bytes, pos: int, max_frames: int | None):
-    """Length-prefixed frame splitter: returns (frames, new_pos).
-
-    Stops cleanly before a partial frame (a writer caught mid-append) —
-    the incremental-offset contract.
-    """
-    frames: list[bytes] = []
-    n = len(buf)
-    # bound checked at loop top: max_frames=0 must read NOTHING (the
-    # replay reader passes a zero budget to mean exactly that)
-    while pos + 4 <= n and (max_frames is None or len(frames) < max_frames):
-        (ln,) = struct.unpack_from(">I", buf, pos)
-        if pos + 4 + ln > n:
-            break  # partial tail — wait for the writer
-        frames.append(buf[pos + 4 : pos + 4 + ln])
-        pos += 4 + ln
-    return frames, pos
-
-
-def write_frame(fh, frame: bytes) -> None:
-    """Append one u32-length-prefixed frame (the segment/relay framing)."""
-    fh.write(struct.pack(">I", len(frame)) + frame)
-
-
 class FrameLogTailTransport(WalTransport):
     """Tail an append-only directory of length-prefixed frame segments.
 
@@ -139,8 +199,6 @@ class FrameLogTailTransport(WalTransport):
     growth, so appends become visible without any file rotation.
     """
 
-    STATUS_FILE = "status.log"
-
     def __init__(self, path: str, position: dict | None = None):
         self.path = path
         pos = position or {}
@@ -151,23 +209,10 @@ class FrameLogTailTransport(WalTransport):
     def position(self) -> dict:
         return {"seg": self._seg, "pos": self._pos}
 
-    def _segments(self) -> list[str]:
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            n
-            for n in names
-            if not n.startswith((".", "_"))
-            and n != self.STATUS_FILE
-            and os.path.isfile(os.path.join(self.path, n))
-        )
-
     # -- WalTransport ----------------------------------------------------
     def poll(self, max_frames: int | None = None) -> list[bytes]:
         out: list[bytes] = []
-        segs = self._segments()
+        segs = list_segments(self.path)
         # start at the checkpointed segment (or the first one)
         idx = 0
         if self._seg:
@@ -184,7 +229,7 @@ class FrameLogTailTransport(WalTransport):
                 f.seek(self._pos)
                 buf = f.read()
             want = None if max_frames is None else max_frames - len(out)
-            frames, consumed = _read_frames(buf, 0, want)
+            frames, consumed = split_frames(buf, 0, want)
             self._pos += consumed
             out.extend(frames)
             if max_frames is not None and len(out) >= max_frames:
@@ -202,18 +247,12 @@ class FrameLogTailTransport(WalTransport):
 
     def send_standby_status(self, lsn: str, ping: bool = False) -> None:
         os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, self.STATUS_FILE), "ab") as f:
+        with open(os.path.join(self.path, STATUS_FILE), "ab") as f:
             write_frame(f, standby_status_frame(lsn, ping))
 
     # -- test/ops audit --------------------------------------------------
     def sent_statuses(self) -> list[dict]:
-        p = os.path.join(self.path, self.STATUS_FILE)
-        if not os.path.exists(p):
-            return []
-        with open(p, "rb") as f:
-            buf = f.read()
-        frames, _ = _read_frames(buf, 0, None)
-        return [parse_standby_status(fr) for fr in frames]
+        return read_statuses_since(self.path, 0)[0]
 
 
 class SocketFrameTransport(WalTransport):
@@ -248,7 +287,7 @@ class SocketFrameTransport(WalTransport):
             if not chunk:
                 break  # peer closed; buffered frames still drain below
             self._buf += chunk
-        frames, pos = _read_frames(self._buf, 0, max_frames)
+        frames, pos = split_frames(self._buf, 0, max_frames)
         self._buf = self._buf[pos:]
         return frames
 
@@ -256,7 +295,7 @@ class SocketFrameTransport(WalTransport):
         frame = standby_status_frame(lsn, ping)
         self._sock.setblocking(True)
         try:
-            self._sock.sendall(struct.pack(">I", len(frame)) + frame)
+            self._sock.sendall(frame_record(frame))
         finally:
             self._sock.setblocking(False)
 
@@ -294,10 +333,11 @@ class WalsenderTransport(WalTransport):
       ErrorResponse ('E');
     * :meth:`send_standby_status` wraps the 'r' frame in CopyData.
 
-    The sandbox has no PostgreSQL, so tests drive this against an
-    in-process fake server implementing the same public protocol
-    (tests/test_transport.py) — handshake, auth, CopyBoth and the
-    status-update readback all exercised over a real socket.
+    Tests drive this against an in-process fake server implementing the
+    same public protocol (tests/test_transport.py: handshake, auth,
+    CopyBoth and the status-update readback over a real socket) and
+    against a real PostgreSQL (tests/test_live_pg.py,
+    ``scripts/livepg_run.sh``).
     """
 
     def __init__(
@@ -729,28 +769,26 @@ class FrameLogWriter:
         path: str,
         segment_frames: int = 100_000,
         rotate_bytes: int = 256 * 1024 * 1024,
-        start_segment: str = "000001.seg",
     ):
         os.makedirs(path, exist_ok=True)
         self.path = path
         self.segment_frames = segment_frames
         self.rotate_bytes = rotate_bytes
-        segs = sorted(
-            n
-            for n in os.listdir(path)
-            if n.endswith(".seg") and os.path.isfile(os.path.join(path, n))
-        )
+        self._idx, self._count, self._bytes = 1, 0, 0
+        segs = list_segments(path)
         if segs:
             name = segs[-1]
             full = os.path.join(path, name)
             with open(full, "rb") as f:
                 buf = f.read()
-            frames, pos = _read_frames(buf, 0, None)
+            frames, pos = split_frames(buf, 0, None)
             if pos < len(buf):
                 with open(full, "r+b") as f:
                     f.truncate(pos)  # torn tail from a crashed writer
             self._idx = int(name.split(".")[0])
-            if name != f"{self._idx:06d}.seg":
+            if name == self.segment_name:
+                self._count, self._bytes = len(frames), pos
+            else:
                 # Foreign-named segment (e.g. a bootstrap pre-segment
                 # like 000000.00001.bootstrap.seg): NEVER append to it
                 # and never open its bare index — a fresh 000000.seg
@@ -758,15 +796,6 @@ class FrameLogWriter:
                 # would replay live frames ahead of the snapshot. Open
                 # the next canonical segment instead.
                 self._idx += 1
-                self._count = 0
-                self._bytes = 0
-            else:
-                self._count = len(frames)
-                self._bytes = pos
-        else:
-            self._idx = int(start_segment.split(".")[0])
-            self._count = 0
-            self._bytes = 0
 
     @property
     def segment_name(self) -> str:
@@ -803,133 +832,6 @@ class FrameLogWriter:
         return len(frames)
 
 
-def relay_to_frame_log(
-    transport: WalTransport,
-    path: str,
-    segment_name: str = "000001.seg",
-    max_frames: int | None = None,
-    rotate_bytes: int = 256 * 1024 * 1024,
-) -> int:
-    """Drain a transport into the durable frame log — the deployment
-    glue between a live walsender connection and the ``pg_cdc`` source.
-
-    One relay per slot runs wherever the PG connection lives (an edge
-    container, the driver, a sidecar); Spark tails the log with
-    ``transport=frames`` and acknowledges via the tail transport's
-    status file, which the relay forwards upstream. Segments rotate at
-    ``rotate_bytes`` (every polled frame is written — rotation opens a
-    successor segment, it never discards) so batch-mode file
-    parallelism and retention both follow the WAL-segment pattern.
-    Returns frames written, always equal to frames polled.
-
-    Appends are frame-atomic from the reader's perspective: the tail
-    transport's splitter stops before a partial frame, so a reader
-    racing this writer sees only complete frames.
-
-    The writer is cached per (path, segment, rotate_bytes): its
-    __init__ scans the last segment to find the resume point, so a
-    fresh writer per call would cost O(segment bytes, up to
-    rotate_bytes) per poll — the same O(segment²) tailing pattern the
-    r4 tailer fix removed (ADVICE r4 low). Loop callers wanting full
-    control should hold a FrameLogWriter directly, like run_relay.
-    """
-    frames = transport.poll(max_frames)
-    if not frames:
-        return 0
-    key = (os.path.abspath(path), segment_name, rotate_bytes)
-    writer = _RELAY_WRITERS.get(key)
-    if writer is not None and not _writer_state_current(writer, path):
-        # Directory state diverged since the last call (dir deleted and
-        # recreated, or another writer appended/rotated the same dir):
-        # the cached _idx/_count/_bytes would resume at a wrong segment
-        # index with wrong rotation accounting (ADVICE r5). Rebuild —
-        # FrameLogWriter.__init__ re-derives the resume point from disk.
-        del _RELAY_WRITERS[key]
-        writer = None
-    if writer is None:
-        if len(_RELAY_WRITERS) >= 64:
-            # bound the cache: evict entries whose log dir is gone
-            # (completed/teardown relays); the cap only matters for a
-            # process juggling many ephemeral log dirs
-            for k in [
-                k for k in _RELAY_WRITERS if not os.path.isdir(k[0])
-            ]:
-                del _RELAY_WRITERS[k]
-        writer = _RELAY_WRITERS[key] = FrameLogWriter(
-            path,
-            # byte-capped only, per the original contract
-            segment_frames=2**62,
-            rotate_bytes=rotate_bytes,
-            start_segment=segment_name,
-        )
-    return writer.append(frames)
-
-
-def _writer_state_current(writer: "FrameLogWriter", path: str) -> bool:
-    """True iff a cached FrameLogWriter's resume state still matches the
-    directory: its current segment file exists with exactly the byte
-    count it last wrote (a fresh writer that hasn't created its file yet
-    passes with _bytes == 0), and no LATER canonical segment appeared
-    behind its back.
-
-    Cost discipline (round-6 review #5): the per-call checks are two
-    stats (segment size + directory mtime); the O(#segments) listdir
-    for the rare foreign-rotation question runs only when the
-    directory's mtime moved since this writer's last validated view —
-    appends to the current segment don't touch dir mtime, so a hot
-    relay poll loop normally never lists a long-retention log."""
-    if not os.path.isdir(path):
-        return False
-    seg = os.path.join(path, writer.segment_name)
-    if writer._bytes == 0:
-        size_ok = (not os.path.exists(seg)) or os.path.getsize(seg) == 0
-    else:
-        size_ok = os.path.isfile(seg) and os.path.getsize(seg) == writer._bytes
-    if not size_ok:
-        return False
-    dir_sig = os.stat(path).st_mtime_ns
-    if getattr(writer, "_plrs_dir_sig", None) == dir_sig:
-        return True
-    # dir contents changed (a file was created/renamed — possibly our
-    # own rotation, possibly a foreign writer): one full check, then
-    # cache the new signature
-    later = any(
-        n.endswith(".seg")
-        and n[:6].isdigit()
-        and int(n.split(".")[0]) > writer._idx
-        for n in os.listdir(path)
-    )
-    if later:
-        return False
-    writer._plrs_dir_sig = dir_sig
-    return True
-
-
-_RELAY_WRITERS: dict[tuple[str, str, int], "FrameLogWriter"] = {}
-
-
-def forward_acks_upstream(
-    log_path: str, transport: WalTransport, after_index: int = 0
-) -> int:
-    """Forward Standby Status Updates the Spark reader appended to the
-    frame log's ``status.log`` up the live connection. Returns the new
-    index (pass it back next call) — the relay's ack loop:
-    Spark checkpoint commit → status.log → walsender 'r' frame → PG
-    advances the slot's confirmed_flush_lsn.
-    """
-    tail = FrameLogTailTransport(log_path)
-    statuses = tail.sent_statuses()
-    from pg_logical_replication_spark.model import long_to_lsn
-
-    for s in statuses[after_index:]:
-        # re-send at the recorded position (frame builder re-applies +1,
-        # so step back one byte to preserve the exact flushed position)
-        transport.send_standby_status(
-            long_to_lsn(s["flushed"] - 1), ping=s["ping"]
-        )
-    return len(statuses)
-
-
 def read_statuses_since(
     log_path: str, offset: int
 ) -> tuple[list[dict], int]:
@@ -937,37 +839,15 @@ def read_statuses_since(
     statuses, new offset). The relay's ack loop uses this instead of
     re-parsing the whole file every interval — O(new acks), not
     O(all acks ever), which matters for a relay running for weeks."""
-    p = os.path.join(log_path, FrameLogTailTransport.STATUS_FILE)
+    p = os.path.join(log_path, STATUS_FILE)
     try:
         with open(p, "rb") as f:
             f.seek(offset)
             buf = f.read()
     except FileNotFoundError:
         return [], offset
-    frames, consumed = _read_frames(buf, 0, None)
+    frames, consumed = split_frames(buf, 0, None)
     return [parse_standby_status(fr) for fr in frames], offset + consumed
-
-
-def resend_last_status(log_path: str, transport: WalTransport) -> bool:
-    """Re-send the most recent recorded Standby Status Update (or a
-    zero-position keepalive if none was ever recorded) — the reference's
-    idle re-ack: its 1 s timer re-acks ``lastLsn`` whenever the timeout
-    elapses even with NO new progress
-    (``logical-replication-service.ts:238-247``), which is what keeps an
-    idle slot's walsender from hitting ``wal_sender_timeout``. Returns
-    True if a frame went upstream.
-    """
-    from pg_logical_replication_spark.model import long_to_lsn
-
-    statuses = FrameLogTailTransport(log_path).sent_statuses()
-    if statuses:
-        s = statuses[-1]
-        transport.send_standby_status(long_to_lsn(s["flushed"] - 1))
-    else:
-        # nothing acknowledged yet: a zero-position status still resets
-        # the server's wal_sender_timeout without advancing the slot
-        transport.send_standby_status("0/00000000")
-    return True
 
 
 def last_logged_lsn(log_dir: str) -> str | None:
@@ -978,20 +858,14 @@ def last_logged_lsn(log_dir: str) -> str | None:
     are not appended twice. Returns None for an empty/missing log.
     """
     tail = FrameLogTailTransport(log_dir)
-    from pg_logical_replication_spark.model import long_to_lsn
-
-    best: int | None = None
-    while True:
-        frames = tail.poll(max_frames=10_000)
-        if not frames:
-            break
-        for frame in frames:
-            tag = frame[:1]
-            if tag in (b"w", b"k") and len(frame) >= 9:
-                (v,) = struct.unpack_from(">Q", frame, 1)
-                if best is None or v > best:
-                    best = v
-    return None if best is None else long_to_lsn(best)
+    best: str | None = None
+    while frames := tail.poll(max_frames=10_000):
+        for lsn in map(frame_lsn, frames):
+            if lsn is not None and (
+                best is None or lsn_to_long(lsn) > lsn_to_long(best)
+            ):
+                best = lsn
+    return best
 
 
 def copy_out(transport: "WalsenderTransport", sql: str) -> list[bytes]:

@@ -22,8 +22,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# µs between the unix epoch and PostgreSQL's 2000-01-01 epoch
-PG_EPOCH_OFFSET_US = 946_684_800_000_000
+from pg_logical_replication_spark.sources.transport import (
+    KEEPALIVE_SIZE,
+    PG_EPOCH_OFFSET_US,
+    XLOG_HEADER,
+)
 
 
 def _u64(data: Column, pos: int) -> Column:
@@ -74,13 +77,15 @@ def demux_copy_stream(
             F.when(is_w, _u64(data, 18) + F.lit(PG_EPOCH_OFFSET_US))
             .when(is_k, _u64(data, 10) + F.lit(PG_EPOCH_OFFSET_US))
         ).alias("server_ts"),
-        F.when(is_k, F.substring(data, 18, 1) == F.lit(b"\x01")).alias(
-            "should_respond"
-        ),
+        # shouldRespond is the keepalive's last byte (1-based position)
+        F.when(
+            is_k, F.substring(data, KEEPALIVE_SIZE, 1) == F.lit(b"\x01")
+        ).alias("should_respond"),
         F.when(
             is_w,
             data.substr(
-                F.lit(26), F.greatest(F.length(data) - F.lit(25), F.lit(0))
+                F.lit(XLOG_HEADER + 1),
+                F.greatest(F.length(data) - F.lit(XLOG_HEADER), F.lit(0)),
             ),
         ).alias("payload"),
         *[F.col(c) for c in passthrough],

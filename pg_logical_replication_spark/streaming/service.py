@@ -280,6 +280,9 @@ class LogicalReplicationService:
                 BOOTSTRAP_DONE_MARKER,
                 bootstrap_to_frame_log,
             )
+            from pg_logical_replication_spark.sources.transport import (
+                list_segments,
+            )
 
             names = (
                 _os.listdir(self.event_log_dir)
@@ -293,7 +296,8 @@ class LogicalReplicationService:
             # the snapshot point, re-loading would duplicate state.
             done = BOOTSTRAP_DONE_MARKER in names
             live_segments = any(
-                n.endswith(".seg") and ".bootstrap." not in n for n in names
+                ".bootstrap." not in n
+                for n in list_segments(self.event_log_dir)
             )
             if not done and not live_segments:
                 # stale partials from a crashed earlier attempt (visible

@@ -479,6 +479,38 @@ def test_latest_image_skip_flags_are_exact_noops_on_clean_batches(spark):
     assert n == 1
 
 
+def test_latest_image_no_truncates_still_drops_truncate_rows(spark):
+    """ADVICE r11: no_truncates=True skips only the broadcast barrier.
+    A mis-asserted flag must not leak op='truncate' rows into the
+    image as data rows; the barrier's effect on earlier rows is what
+    the caller gave up."""
+    from pg_logical_replication_spark.operators.apply_changes import (
+        latest_image,
+    )
+
+    schema = (
+        "op string, lsn_long long, `schema` string, `table` string, "
+        "key map<string,string>, after map<string,string>, "
+        "meta map<string,string>"
+    )
+    batch = spark.createDataFrame(
+        [
+            ("insert", 10, "public", "t", None, {"id": "1", "v": "a"},
+             {"pos": "0"}),
+            ("truncate", 20, "public", "t", None, None, {"pos": "0"}),
+            ("insert", 30, "public", "t", None, {"id": "2", "v": "b"},
+             {"pos": "0"}),
+        ],
+        schema,
+    )
+    lean = latest_image(batch, ["id"], no_truncates=True)
+    assert sorted(r["op"] for r in lean.collect()) == ["insert", "insert"]
+    plan = lean._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    full = latest_image(batch, ["id"])
+    assert [r["after"]["id"] for r in full.collect()] == ["2"]
+
+
 def test_apply_changes_passes_skip_flags_through(spark):
     """r11: apply_changes forwards no_truncates/no_key_splits to
     latest_image — snapshot identical on a clean batch, and the lean

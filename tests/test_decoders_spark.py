@@ -1337,17 +1337,11 @@ def test_reassemble_random_fragmentation_property(spark):
     assert got == want
 
 
-def test_pgoutput_versioned_supplied_registry_matches_prescan(spark):
-    """optimization r11: `relations=` accepts the pre-scan's own
-    versioned shape (oid -> [(valid_from_seq, RelationInfo), ...]) —
-    rows decode under the newest supplied schema <= their seq, row-
-    identical to the pre-scan path at any parallelism. This is what
-    lets the evolution fixtures skip the pre-scan collect over a wire
-    they synthesized themselves."""
-    from pg_logical_replication_spark.sources.pgoutput import (
-        decode_pgoutput,
-    )
-
+def _two_version_wire(spark):
+    """A users table whose relation is re-announced mid-stream (ALTER
+    TABLE … ADD COLUMN email), spread over many partitions: a partition
+    holding only the v2-era insert must resolve v2 from the SUPPLIED
+    versions, not an in-band 'R' it never saw. Returns (raw, v1, v2)."""
     ts = 1_755_000_000_000_000
     rel_v1 = pg.encode_relation(
         1001, "public", "users", [("id", 20), ("name", 25)],
@@ -1368,9 +1362,6 @@ def test_pgoutput_versioned_supplied_registry_matches_prescan(spark):
     ]
     stream = [(f"00000000/{0x1000 + i:08X}", i, m)
               for i, m in enumerate(msgs)]
-    # many partitions: a partition holding only the v2-era insert must
-    # resolve v2 from the SUPPLIED versions, not an in-band 'R' it
-    # never saw
     raw = spark.createDataFrame(
         stream, "lsn string, seq long, data binary").repartition(8)
 
@@ -1379,7 +1370,22 @@ def test_pgoutput_versioned_supplied_registry_matches_prescan(spark):
         pg.parse_message(buf, tmp)
         return tmp[1001]
 
-    versioned = {1001: [(1, info(rel_v1)), (5, info(rel_v2))]}
+    return raw, info(rel_v1), info(rel_v2)
+
+
+def test_pgoutput_versioned_supplied_registry_matches_prescan(spark):
+    """optimization r11: `relations=` accepts the pre-scan's own
+    versioned shape (oid -> [(valid_from_seq, RelationInfo), ...]) —
+    rows decode under the newest supplied schema <= their seq, row-
+    identical to the pre-scan path at any parallelism. This is what
+    lets the evolution fixtures skip the pre-scan collect over a wire
+    they synthesized themselves."""
+    from pg_logical_replication_spark.sources.pgoutput import (
+        decode_pgoutput,
+    )
+
+    raw, v1, v2 = _two_version_wire(spark)
+    versioned = {1001: [(1, v1), (5, v2)]}
     key = lambda r: (r["seq"],)  # noqa: E731
     got = sorted(
         decode_pgoutput(raw, relations=versioned).collect(), key=key)
@@ -1389,3 +1395,28 @@ def test_pgoutput_versioned_supplied_registry_matches_prescan(spark):
            if r["op"] == "insert"}
     assert ins["1"] == {"id": "1", "name": "alice"}
     assert ins["2"] == {"id": "2", "name": "bob", "email": "b@x.io"}
+
+
+def test_pgoutput_registry_takes_tuple_versions_and_rejects_other_shapes(
+    spark,
+):
+    """ADVICE r11: a TUPLE of (valid_from_seq, RelationInfo) versions is
+    the versioned shape too (it was wrapped as one RelationInfo and
+    failed inside the worker); any other entry raises a TypeError naming
+    the oid before any Spark job runs."""
+    import pytest
+
+    from pg_logical_replication_spark.sources.pgoutput import (
+        decode_pgoutput,
+    )
+
+    raw, v1, v2 = _two_version_wire(spark)
+    key = lambda r: (r["seq"],)  # noqa: E731
+    as_tuple = decode_pgoutput(raw, relations={1001: ((1, v1), (5, v2))})
+    as_list = decode_pgoutput(raw, relations={1001: [(1, v1), (5, v2)]})
+    assert [r.asDict() for r in sorted(as_tuple.collect(), key=key)] == [
+        r.asDict() for r in sorted(as_list.collect(), key=key)
+    ]
+    for bad in ("users", (1, v1), [(1, v1), "v2"], {1: v1}):
+        with pytest.raises(TypeError, match=r"relations\[1001\]"):
+            decode_pgoutput(raw, relations={1001: bad})

@@ -1,10 +1,11 @@
 """Opt-in conformance run against a REAL PostgreSQL server.
 
-The sandbox has no PostgreSQL, so the walsender client is normally
-pinned against the in-process fake server (tests/test_transport.py) —
-that pins the engine's *reading* of the public protocol spec; one run
-against a live server pins the spec itself (VERDICT r4 #7; the
-reference's CI matrix is PG 14-18, .github/workflows/*.yml).
+The hermetic suite pins the walsender client against the in-process
+fake server (tests/test_transport.py) — that pins the engine's
+*reading* of the public protocol spec; a run against a live server
+pins the spec itself (VERDICT r4 #7; the reference's CI matrix is
+PG 14-18, .github/workflows/*.yml). ``scripts/livepg_run.sh`` starts a
+local PostgreSQL 15, runs this module and tears the server down.
 
 Run it anywhere a PG >= 14 is reachable:
 
@@ -94,21 +95,21 @@ def _exec_sql(t, sql):
 def _relay_until(t, log_dir, want_frames, timeout=30.0):
     """Relay until the log holds >= want_frames DATA ('w') frames.
 
-    Counting relay_to_frame_log's raw return is wrong on a real server:
+    Counting the relay's raw frame count is wrong on a real server:
     it includes keepalive ('k') frames, which PG sends eagerly at
     connect and on wal_sender_timeout/2 ticks, so a raw count reaches
     the threshold before the DML tail arrives (found by the live-PG
     15.18 conformance run, round 6 — UPDATE/DELETE frames were still
     in flight when the raw count hit the mark)."""
+    from pg_logical_replication_spark.relay import run_relay
     from pg_logical_replication_spark.sources.transport import (
         FrameLogTailTransport,
-        relay_to_frame_log,
     )
 
     deadline = time.time() + timeout
     data = 0
     while time.time() < deadline:
-        relay_to_frame_log(t, log_dir)
+        run_relay(t, log_dir, stop_after_seconds=0)  # one pass
         data = sum(
             1 for fr in FrameLogTailTransport(log_dir).poll() if fr[:1] == b"w"
         )
@@ -1015,18 +1016,15 @@ def test_live_pgoutput_origin_messages(spark, live, tmp_path):
 def test_live_ack_loop_advances_confirmed_flush(spark, live, tmp_path):
     """The deployment loop's acknowledge leg against the REAL server:
     relay → pg_cdc stream → checkpoint-commit ack → status.log →
-    forward_acks_upstream → byte-exact 'r' frame → the server's own
+    run_relay's ack forward → byte-exact 'r' frame → the server's own
     pg_replication_slots.confirmed_flush_lsn ADVANCES. The hermetic
     suite pins the frame bytes; only a live server can confirm PG
     accepts them and moves the slot."""
     import time as _t
 
     from pg_logical_replication_spark.model import lsn_to_long
+    from pg_logical_replication_spark.relay import run_relay
     from pg_logical_replication_spark.sources.datasource import register
-    from pg_logical_replication_spark.sources.transport import (
-        forward_acks_upstream,
-        relay_to_frame_log,
-    )
 
     register(spark)
     t = live.admin
@@ -1065,9 +1063,9 @@ def test_live_ack_loop_advances_confirmed_flush(spark, live, tmp_path):
         target = max(lsn_to_long(r["lsn"]) for r in got if r["lsn"])
         advanced = None
         while _t.time() < deadline:
-            forward_acks_upstream(log, s)
-            # keep the relay draining so the ack round-trip stays live
-            relay_to_frame_log(s, log)
+            # one relay pass forwards the recorded acks and keeps the
+            # log draining so the ack round-trip stays live
+            run_relay(s, log, stop_after_seconds=0)
             advanced = _exec_sql(
                 t,
                 "SELECT confirmed_flush_lsn FROM pg_replication_slots "

@@ -756,7 +756,7 @@ def test_walsender_poll_requires_start_and_bad_password_fails():
 
 def test_full_chain_fake_pg_to_spark_snapshot(spark, tmp_path):
     """The complete deployment chain: fake PG server → WalsenderTransport
-    (real v3 protocol) → relay_to_frame_log → pg_cdc transport=frames
+    (real v3 protocol) → run_relay → pg_cdc transport=frames
     stream → wire demux → wal2json decode → apply_changes snapshot, with
     Spark's checkpoint-commit acks forwarded upstream to the server."""
     import json
@@ -765,11 +765,10 @@ def test_full_chain_fake_pg_to_spark_snapshot(spark, tmp_path):
     from pg_logical_replication_spark.operators.apply_changes import (
         apply_changes,
     )
+    from pg_logical_replication_spark.relay import run_relay
     from pg_logical_replication_spark.sources.datasource import register
     from pg_logical_replication_spark.sources.transport import (
         WalsenderTransport,
-        forward_acks_upstream,
-        relay_to_frame_log,
     )
     from pg_logical_replication_spark.sources.wal2json import decode_wal2json
     from pg_logical_replication_spark.sources.wire import demux_copy_stream
@@ -799,11 +798,9 @@ def test_full_chain_fake_pg_to_spark_snapshot(spark, tmp_path):
     t.start_replication("slot1", "0/3000", options={"format-version": "1"})
 
     log = str(tmp_path / "wal")
-    deadline = _t.time() + 10
-    total = 0
-    while total < 6 and _t.time() < deadline:
-        total += relay_to_frame_log(t, log)
-        _t.sleep(0.02)
+    total = run_relay(
+        t, log, poll_interval=0.02, stop_after_frames=6, stop_after_seconds=10
+    )
     assert total == 6
 
     cp = str(tmp_path / "cp")
@@ -824,9 +821,10 @@ def test_full_chain_fake_pg_to_spark_snapshot(spark, tmp_path):
             _t.sleep(0.1)
         assert len(got) == 6
         # wait for the commit-time ack to land in status.log, then
-        # forward it up the live connection
+        # forward it up the live connection (one relay pass ends with
+        # the final ack flush)
         while _t.time() < deadline:
-            n = forward_acks_upstream(log, t)
+            run_relay(t, log, stop_after_seconds=0)
             if srv.received_statuses:
                 break
             _t.sleep(0.1)
@@ -933,51 +931,6 @@ def test_walsender_unknown_auth_code_refused_loudly():
         WalsenderTransport(
             "127.0.0.1", port, user="rep", database="app", password="x"
         )
-    srv.close()
-
-
-def test_run_relay_loop_with_rotation_and_acks(tmp_path):
-    """relay.run_relay: drains the transport into rotating segments,
-    forwards recorded acks upstream, stops on the frame bound."""
-    from pg_logical_replication_spark.relay import run_relay
-    from pg_logical_replication_spark.sources.transport import (
-        WalsenderTransport,
-    )
-
-    frames = [_xlog(0x7000 + 8 * i, f"p{i}".encode()) for i in range(7)]
-    srv = _FakePgServer(password=None, frames=frames)
-    t = WalsenderTransport("127.0.0.1", srv.port, user="r", database="d")
-    t.start_replication("s", "0/7000")
-
-    log = str(tmp_path / "wal")
-    n = run_relay(
-        t, log,
-        poll_interval=0.02,
-        segment_frames=3,       # force rotation
-        stop_after_frames=7,
-        stop_after_seconds=15,
-    )
-    assert n == 7
-    segs = sorted(
-        f for f in os.listdir(log) if f.endswith(".seg")
-    )
-    assert len(segs) >= 2  # rotated at 3 frames/segment
-
-    # simulate the Spark reader acknowledging, then relay the ack up
-    FrameLogTailTransport(log).send_standby_status("0/7030")
-    from pg_logical_replication_spark.sources.transport import (
-        forward_acks_upstream,
-    )
-
-    forward_acks_upstream(log, t)
-    import time as _t
-
-    deadline = _t.time() + 5
-    while not srv.received_statuses and _t.time() < deadline:
-        _t.sleep(0.05)
-    assert srv.received_statuses
-    assert srv.received_statuses[-1]["flushed"] == 0x7031
-    t.close()
     srv.close()
 
 
@@ -1162,28 +1115,6 @@ class _ListTransport:
 
     def send_standby_status(self, lsn, ping=False):
         self.statuses.append((lsn, ping))
-
-
-def test_relay_byte_cap_rotates_without_frame_loss(tmp_path):
-    """The r3-advice high: frames past rotate_bytes were silently
-    dropped after being drained from the transport. Now the writer
-    rotates to a successor segment instead — zero loss."""
-    from pg_logical_replication_spark.sources.transport import (
-        relay_to_frame_log,
-    )
-
-    d = str(tmp_path / "wal")
-    # 20 frames x ~1KB with a 600-byte cap: every frame must still land
-    frames = [_xlog(0x100 + 8 * i, payload=b"x" * 1000) for i in range(20)]
-    t = _ListTransport(frames)
-    wrote = relay_to_frame_log(t, d, rotate_bytes=600)
-    assert wrote == 20
-    segs = sorted(f for f in os.listdir(d) if f.endswith(".seg"))
-    assert len(segs) >= 10  # rotated roughly per-frame at this cap
-    got = FrameLogTailTransport(d).poll()
-    assert [int.from_bytes(fr[1:9], "big") for fr in got] == [
-        0x100 + 8 * i for i in range(20)
-    ]
 
 
 def test_frame_log_writer_rotates_on_frames_and_bytes(tmp_path):
@@ -1715,7 +1646,6 @@ def test_multi_slot_relay_and_independent_restart(spark, tmp_path):
     from pg_logical_replication_spark.sources.datasource import register
     from pg_logical_replication_spark.sources.transport import (
         WalsenderTransport,
-        forward_acks_upstream,
     )
 
     def w2j_frame(lsn, rid, table):
@@ -1763,7 +1693,7 @@ def test_multi_slot_relay_and_independent_restart(spark, tmp_path):
     FrameLogTailTransport(os.path.join(base, "slot_a")).send_standby_status(
         "0/310"
     )
-    forward_acks_upstream(os.path.join(base, "slot_a"), t_a2)
+    run_multi_relay({"slot_a": t_a2}, base, stop_after_seconds=0)
     deadline = _t.time() + 5
     while not srv_a2.received_statuses and _t.time() < deadline:
         _t.sleep(0.02)
@@ -2090,42 +2020,6 @@ def test_copy_parse_octal_escape_guard(spark):
     df = parse_copy_lines(lines, {"id": "bigint", "v": "text"})
     with _pt.raises(Exception, match="unsupported COPY escape"):
         df.collect()
-
-
-def test_relay_writer_cache_rebuilds_on_dir_recreation(tmp_path):
-    """ADVICE r5: a cached relay writer must not resume with stale
-    _idx/_count/_bytes after the log directory is deleted and recreated
-    (or after another writer appended/rotated the same dir) — it would
-    write into a fresh log at a wrong segment index with wrong rotation
-    accounting."""
-    from pg_logical_replication_spark.sources.transport import (
-        FrameLogWriter,
-        relay_to_frame_log,
-    )
-
-    d = str(tmp_path / "wal")
-    relay_to_frame_log(_ListTransport([_xlog(0x10), _xlog(0x18)]), d)
-    assert sorted(os.listdir(d)) == ["000001.seg"]
-
-    # dir deleted AND recreated between calls: cached state is stale
-    import shutil
-
-    shutil.rmtree(d)
-    os.makedirs(d)
-    relay_to_frame_log(_ListTransport([_xlog(0x20)]), d)
-    got = FrameLogTailTransport(d).poll()
-    assert [int.from_bytes(fr[1:9], "big") for fr in got] == [0x20]
-
-    # a FOREIGN writer rotates the same dir: cache must re-derive, not
-    # append at its remembered (now-sealed) segment
-    w = FrameLogWriter(d, segment_frames=1)
-    w.append([_xlog(0x28), _xlog(0x30)])  # seals 000001, writes 000002+
-    relay_to_frame_log(_ListTransport([_xlog(0x38)]), d)
-    vals = [
-        int.from_bytes(fr[1:9], "big")
-        for fr in FrameLogTailTransport(d).poll()
-    ]
-    assert vals == [0x20, 0x28, 0x30, 0x38]
 
 
 def test_copy_in_raises_on_non_copy_statement():
