@@ -66,6 +66,26 @@ def key_change_predicate(key_columns: list[str]) -> Column:
     )
 
 
+def with_row_identity(
+    ev: DataFrame, key_columns: list[str]
+) -> tuple[DataFrame, list[str]]:
+    """Add ``_identity``, the row identity every per-key operator keys
+    on: the key columns from the new image for upserts, from the key
+    image for deletes. An array groups fine (maps don't); ``array(
+    after[k])`` is ``[null]``, never null, so a coalesce can't pick.
+
+    Returns the frame and its per-key partition ``[schema?, table,
+    _identity]``: schema participates in row identity (public.users ≠
+    audit.users), tolerating schema-less frames from callers that
+    pre-filtered."""
+    identity = F.when(
+        F.col("op").isin("insert", "update") & F.col("after").isNotNull(),
+        F.array(*[F.col("after").getItem(k) for k in key_columns]),
+    ).otherwise(F.array(*[F.col("key").getItem(k) for k in key_columns]))
+    part = (["schema"] if "schema" in ev.columns else []) + ["table", "_identity"]
+    return ev.withColumn("_identity", identity), part
+
+
 def latest_image(
     events: DataFrame,
     key_columns: list[str],
@@ -129,7 +149,6 @@ def latest_image(
     # Key-change updates (key image ≠ new row's key projection) split into
     # a tombstone for the old identity + an upsert for the new identity.
     # Arrays are orderable/comparable; maps are not.
-    is_dml_upsert = F.col("op").isin("insert", "update")
     if not no_key_splits:
         tombstones = (
             ev.filter(key_change_predicate(key_columns))
@@ -138,18 +157,8 @@ def latest_image(
         )
         ev = ev.unionByName(tombstones)
 
-    # Row identity: key columns from the new image for upserts, from the
-    # key image for deletes. Array groups fine (maps don't).
-    identity = F.when(
-        is_dml_upsert & F.col("after").isNotNull(),
-        F.array(*[F.col("after").getItem(k) for k in key_columns]),
-    ).otherwise(F.array(*[F.col("key").getItem(k) for k in key_columns]))
-    ev = ev.withColumn("_identity", identity)
+    ev, part = with_row_identity(ev, key_columns)
 
-    # schema participates in row identity (public.users ≠ audit.users);
-    # tolerate schema-less event frames from callers that pre-filtered
-    part = ["schema", "table", "_identity"] if "schema" in ev.columns else [
-        "table", "_identity"]
     # Newest-per-key as a rank-1 window, adjudicated in r11 (VERDICT
     # r10 #2): Spark plans the rn=1 filter as Sort+WindowGroupLimit
     # (Partial) BELOW the exchange, so each map task already ships at
@@ -371,15 +380,7 @@ def scd2_history(
     ev = ev.filter(F.col("op").isin("insert", "update", "delete"))
     ev = ev.withColumn("_ord", order if order is not None else _order_col(ev))
 
-    identity = F.when(
-        F.col("op").isin("insert", "update") & F.col("after").isNotNull(),
-        F.array(*[F.col("after").getItem(k) for k in key_columns]),
-    ).otherwise(F.array(*[F.col("key").getItem(k) for k in key_columns]))
-    ev = ev.withColumn("_identity", identity)
-
-    # schema participates in version identity, same as latest_image
-    part = ["schema", "table", "_identity"] if "schema" in ev.columns else [
-        "table", "_identity"]
+    ev, part = with_row_identity(ev, key_columns)
     w = Window.partitionBy(*part).orderBy("_ord")
     return (
         ev.withColumn("valid_from_lsn", F.col("lsn_long"))
@@ -588,14 +589,8 @@ def net_changes(
     )
     dml = dml.unionByName(tombstones)
 
-    identity = F.when(
-        F.col("op").isin("insert", "update") & F.col("after").isNotNull(),
-        F.array(*[F.col("after").getItem(k) for k in key_columns]),
-    ).otherwise(F.array(*[F.col("key").getItem(k) for k in key_columns]))
-    dml = dml.withColumn("_identity", identity)
-
+    dml, part = with_row_identity(dml, key_columns)
     has_schema = "schema" in dml.columns
-    part = (["schema"] if has_schema else []) + ["table", "_identity"]
     last_payload = F.struct(
         F.col("op").alias("op"),
         F.col("after").alias("after"),

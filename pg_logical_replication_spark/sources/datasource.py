@@ -61,8 +61,8 @@ from pyspark.sql.datasource import (
 
 from pg_logical_replication_spark.sources.transport import (
     KEEPALIVE_SIZE,
-    XLOG_HEADER,
     FrameLogTailTransport,
+    block_open_after,
     frame_lsn,
     list_segments,
     split_frames,
@@ -72,32 +72,15 @@ RAW_SCHEMA = "lsn string, seq long, value string, data binary"
 
 _SEQ_SHIFT = 32  # seq = (file_index << 32) | row_in_file
 
-def _segment_edge(frame: bytes) -> int:
-    """+1 for a pgoutput Stream Start ('S' + xid + first-segment flag),
-    -1 for a Stream Stop ('E'), 0 for any other frame. The exact payload
-    sizes keep other formats' payloads (JSON, text, protobuf) out."""
-    if frame[:1] != b"w":
-        return 0
-    size, tag = len(frame) - XLOG_HEADER, frame[XLOG_HEADER:XLOG_HEADER + 1]
-    if size == 6 and tag == b"S":
-        return 1
-    return -1 if size == 1 and tag == b"E" else 0
-
-
 def _batch_end(frames: list[bytes], limit: int | None) -> int:
     """How many leading ``frames`` a micro-batch takes: the longest
-    prefix of at most ``limit`` frames that ends outside every streamed
-    segment ('S'…'E') — or, when the first segment alone is longer than
-    ``limit``, the prefix up to its 'E'. 0 while that 'E' is unlogged.
-
-    A batch must not end inside a segment: the next batch would decode
-    the rest of it as non-streamed and read each change's spliced xid
-    as its relation oid."""
+    prefix of at most ``limit`` frames that ends outside every atomic
+    block ('S'…'E', 'b'…'P'; ``transport.block_open_after``) — or, when
+    the first block alone is longer than ``limit``, the prefix up to its
+    end. 0 while that end is unlogged."""
     end, open_ = 0, False
     for i, frame in enumerate(frames):
-        edge = _segment_edge(frame)
-        if edge:
-            open_ = edge > 0
+        open_ = block_open_after(frame, open_)
         if not open_:
             if end and limit is not None and i + 1 > limit:
                 break
@@ -288,9 +271,10 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
       a Standby Status Update ping at the last received LSN (reference
       ``logical-replication-service.ts:165-171`` + ``:254-300``) — the
       respond loop the file mode cannot close.
-    * Batches end outside protocol-2 streamed segments (``_batch_end``):
-      an unterminated segment waits for its 'E', and a segment longer
-      than ``maxFramesPerTrigger`` is taken whole.
+    * Batches end outside atomic blocks — protocol-2 streamed segments
+      and two-phase frames (``_batch_end``): an unterminated block waits
+      for its end, and a block longer than ``maxFramesPerTrigger`` is
+      taken whole.
     * ``commit(end)`` sends the non-ping status update for the batch's
       last LSN — acknowledge exactly at durable-delivery, Spark's
       checkpoint commit being the reference's auto-ack point. Disable
@@ -317,11 +301,11 @@ class PgCdcFramesStreamReader(SimpleDataSourceStreamReader):
         frames = t.poll(self.max_frames)
         end = _batch_end(frames, self.max_frames)
         while frames and not end:
-            # one streamed segment longer than maxFramesPerTrigger: read
-            # on to its 'E' rather than return an empty batch
+            # one block longer than maxFramesPerTrigger: read on to its
+            # end rather than return an empty batch
             more = t.poll(self.max_frames)
             if not more:
-                break  # unterminated segment: hold it back until its 'E'
+                break  # unterminated block: hold it back until its end
             frames += more
             end = _batch_end(frames, self.max_frames)
         if end < len(frames):

@@ -237,15 +237,18 @@ def decode_pgoutput(
         # R/Y/I/U/D/T/M message carries a spliced Int32 xid. State spans
         # Arrow batches (this generator is per-partition); the input
         # contract extends accordingly: within a partition, rows arrive
-        # in wire order and a streamed segment never straddles a
-        # partition boundary — both hold for sequential log files read
-        # whole (the durable-log layout sources/datasource.py produces).
+        # in wire order and no block ('S'..'E' here, 'b'..'P' below)
+        # straddles a partition boundary. The frame log's one cutting
+        # rule (sources/transport.block_open_after) keeps blocks whole:
+        # FrameLogWriter never seals a segment inside one (the batch
+        # reader decodes one segment per partition) and the frames
+        # stream reader never ends a micro-batch inside one.
         in_stream = False
         stream_top: int | None = None  # current segment's top-level xid
         # two-phase frame state: inside [begin_prepare, prepare) every
         # DML belongs to that prepared txn. Frames are atomic wire
-        # blocks (the walsender replays a prepared txn in one go), so
-        # the same partition contract as streamed segments applies;
+        # blocks (the walsender replays a prepared txn in one go), and
+        # the same cutting rule keeps each within one partition;
         # the stamp lets the STREAMING gate key b..P rows by xid
         # without the batch resolver's positional attribution.
         prepared: tuple[int | None, str | None] | None = None

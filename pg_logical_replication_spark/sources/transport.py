@@ -33,8 +33,9 @@ Transports:
 The frame log itself is written by :class:`FrameLogWriter` (driven by
 ``relay.run_relay``) and read by the tailer, the ``pg_cdc`` batch and
 stream readers and ``last_logged_lsn``. Its layout — which files are
-segments, the length prefix, the 'w'/'k' header sizes, the LSN word and
-the PG epoch — is defined once, in the section below, and every other
+segments, the length prefix, the 'w'/'k' header sizes, the LSN word,
+the PG epoch and the atomic blocks no segment boundary or micro-batch
+may split — is defined once, in the section below, and every other
 module imports it.
 
 Scale note: one replication slot is ONE ordered connection (the
@@ -57,7 +58,9 @@ from pg_logical_replication_spark.model import ack_lsn, long_to_lsn, lsn_to_long
 # ------------------------------------------------------ frame-log layout
 # A frame log is a directory of segment files read in name order, each a
 # run of u32-length-prefixed COPY frames, beside ``status.log``: the
-# Standby Status Updates the reader records, in the same framing.
+# Standby Status Updates the reader records, in the same framing. The
+# one cutting rule: no segment and no micro-batch ends inside an
+# 'S'..'E' or 'b'..'P' block (``block_open_after``).
 
 #: µs between the unix epoch and PostgreSQL's 2000-01-01 epoch
 PG_EPOCH_OFFSET_US = 946_684_800_000_000
@@ -132,6 +135,42 @@ def frame_lsn(frame: bytes) -> str | None:
     ):
         return long_to_lsn(struct.unpack_from(">Q", frame, 1)[0])
     return None
+
+
+def block_open_after(frame: bytes, was_open: bool) -> bool:
+    """Whether an atomic pgoutput block is open after ``frame``, given
+    whether one was open before it.
+
+    The blocks are a protocol-2 streamed segment, Stream Start ('S' +
+    xid + first-segment flag) … Stream Stop ('E'), and a two-phase
+    frame, Begin Prepare ('b' + three 8-byte words + xid + gid) …
+    Prepare ('P' + flags + three 8-byte words + xid + gid). Decode keeps
+    the block state per partition (``sources/pgoutput.py``), so a reader
+    never ends a micro-batch inside a block and the writer never seals
+    a segment inside one: a change cut off from its 'S' would be read as
+    non-streamed (its spliced xid taken for the relation oid), and one
+    cut off from its 'b' would pass the two-phase gate unstamped. The
+    exact payload shapes keep other formats' payloads (JSON, text,
+    protobuf) out.
+    """
+    if frame[:1] != b"w":
+        return was_open
+    # no slice of the payload: the relay calls this for every frame
+    size, tag = len(frame) - XLOG_HEADER, frame[XLOG_HEADER:XLOG_HEADER + 1]
+    if tag == b"S" and size == 6:
+        return True
+    if tag == b"E" and size == 1:
+        return False
+    # Begin Prepare / Prepare: the gid is the one NUL-terminated string,
+    # right after the fixed header
+    gid_at = {b"b": 29, b"P": 30}.get(tag)
+    if (
+        gid_at is None
+        or size <= gid_at
+        or frame.find(b"\x00", XLOG_HEADER + gid_at) != len(frame) - 1
+    ):
+        return was_open
+    return tag == b"b"
 
 
 # ------------------------------------------------------ status frames
@@ -750,7 +789,9 @@ class FrameLogWriter:
     Owns the segment-rotation policy the readers rely on (name-ordered
     segments, only the last one ever grows): a segment seals when it
     reaches ``segment_frames`` frames OR ``rotate_bytes`` bytes,
-    whichever comes first; the next frame opens ``<idx+1>.seg``. A
+    whichever comes first, but only outside an atomic block
+    (:func:`block_open_after`) — the batch reader decodes each segment
+    on its own; the next frame opens ``<idx+1>.seg``. A
     frame is NEVER dropped — an oversized frame still lands (its
     segment simply seals right after), because by the time it reaches
     the writer it has already been drained from the transport and this
@@ -761,7 +802,8 @@ class FrameLogWriter:
     the name-order contract) and truncates a torn partial frame left by
     a crashed writer back to the last complete frame boundary —
     appending after torn bytes would misalign every subsequent frame
-    for the length-prefixed reader (review r3 advice, medium).
+    for the length-prefixed reader (review r3 advice, medium) — and
+    recomputes from that segment whether a block is open.
     """
 
     def __init__(
@@ -775,6 +817,7 @@ class FrameLogWriter:
         self.segment_frames = segment_frames
         self.rotate_bytes = rotate_bytes
         self._idx, self._count, self._bytes = 1, 0, 0
+        self._in_block = False
         segs = list_segments(path)
         if segs:
             name = segs[-1]
@@ -788,6 +831,8 @@ class FrameLogWriter:
             self._idx = int(name.split(".")[0])
             if name == self.segment_name:
                 self._count, self._bytes = len(frames), pos
+                for frame in frames:
+                    self._in_block = block_open_after(frame, self._in_block)
             else:
                 # Foreign-named segment (e.g. a bootstrap pre-segment
                 # like 000000.00001.bootstrap.seg): NEVER append to it
@@ -809,9 +854,13 @@ class FrameLogWriter:
         f = open(os.path.join(self.path, self.segment_name), "ab")
         try:
             for frame in frames:
-                if self._count > 0 and (
-                    self._count >= self.segment_frames
-                    or self._bytes >= self.rotate_bytes
+                if (
+                    self._count > 0
+                    and not self._in_block
+                    and (
+                        self._count >= self.segment_frames
+                        or self._bytes >= self.rotate_bytes
+                    )
                 ):
                     # seal BEFORE opening the successor: the close makes
                     # every buffered byte visible before readers can see
@@ -827,6 +876,7 @@ class FrameLogWriter:
                 write_frame(f, frame)
                 self._count += 1
                 self._bytes += 4 + len(frame)
+                self._in_block = block_open_after(frame, self._in_block)
         finally:
             f.close()
         return len(frames)
@@ -850,22 +900,45 @@ def read_statuses_since(
     return [parse_standby_status(fr) for fr in frames], offset + consumed
 
 
+#: per log directory: sealed segment → its maximum LSN (as a long),
+#: keyed by (name, size, inode, mtime) so a rewritten file is re-read
+_SEALED_MAX: dict[str, dict[tuple, int | None]] = {}
+
+
+def _segment_max_lsn(path: str) -> int | None:
+    with open(path, "rb") as f:
+        frames, _pos = split_frames(f.read(), 0, None)
+    lsns = [lsn_to_long(lsn) for lsn in map(frame_lsn, frames) if lsn]
+    return max(lsns, default=None)
+
+
 def last_logged_lsn(log_dir: str) -> str | None:
     """Newest WAL position recorded in a frame log ('w' walStart / 'k'
     walEnd maxima) — the relay's crash-restart resume point: a restarted
     relay issues START_REPLICATION from here (PG replays from the slot's
     confirmed position, which may be earlier) so already-durable frames
     are not appended twice. Returns None for an empty/missing log.
+
+    The maximum runs over every segment (a keepalive's walEnd in an
+    earlier segment can exceed later walStarts), but a sealed segment's
+    maximum is remembered in process, so a call re-reads only the
+    active (last) segment and segments that changed since.
     """
-    tail = FrameLogTailTransport(log_dir)
-    best: str | None = None
-    while frames := tail.poll(max_frames=10_000):
-        for lsn in map(frame_lsn, frames):
-            if lsn is not None and (
-                best is None or lsn_to_long(lsn) > lsn_to_long(best)
-            ):
-                best = lsn
-    return best
+    names = list_segments(log_dir)
+    prev = _SEALED_MAX.get(os.path.abspath(log_dir), {})
+    sealed: dict[tuple, int | None] = {}
+    best: int | None = None
+    for i, name in enumerate(names):
+        path = os.path.join(log_dir, name)
+        st = os.stat(path)
+        key = (name, st.st_size, st.st_ino, st.st_mtime_ns)
+        top = prev[key] if key in prev else _segment_max_lsn(path)
+        if i + 1 < len(names):
+            sealed[key] = top
+        if top is not None and (best is None or top > best):
+            best = top
+    _SEALED_MAX[os.path.abspath(log_dir)] = sealed
+    return None if best is None else long_to_lsn(best)
 
 
 def copy_out(transport: "WalsenderTransport", sql: str) -> list[bytes]:

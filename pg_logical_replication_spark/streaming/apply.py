@@ -28,7 +28,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pg_logical_replication_spark.operators.apply_changes import latest_image
+from pg_logical_replication_spark.operators.apply_changes import (
+    latest_image,
+    with_row_identity,
+)
 
 
 class MergeOnReadTable:
@@ -278,23 +281,14 @@ class MergeOnReadTable:
             log = log.filter(F.col("lsn_long") <= lsn_to_long(as_of_lsn))
         from pyspark.sql import Window as W
 
-        # Row identity, same rule as operators.apply_changes.latest_image:
-        # upserts identify by the new image, deletes by the key image.
-        # (array(after[k]) is [null], never null — a coalesce can't pick.)
-        ident = F.when(
-            F.col("op").isin("insert", "update") & F.col("after").isNotNull(),
-            F.array(*[F.col("after").getItem(k) for k in self.key_columns]),
-        ).otherwise(F.array(*[F.col("key").getItem(k) for k in self.key_columns]))
-        part = (
-            ["schema", "table"] if "schema" in log.columns else ["table"]
-        )
-        w = W.partitionBy(*part, ident).orderBy(
+        log, part = with_row_identity(log, self.key_columns)
+        w = W.partitionBy(*part).orderBy(
             F.col("_ord1").desc(), F.col("batch").desc()
         )
         return (
             log.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
+            .drop("_rn", "_identity")
         )
 
     def snapshot_columns(self, columns: dict[str, str]) -> DataFrame | None:

@@ -250,6 +250,18 @@ class LogicalReplicationService:
         surface*, exactly the reference's split between ``_lastLsn``
         and the standby-status update.
         """
+        if available_now and source == "frames" and self.max_files_per_trigger:
+            # Spark's availableNow trigger takes the frames source's first
+            # capped offset as its target and stops there, delivering
+            # only the first micro-batch of the backlog
+            raise ValueError(
+                "subscribe(available_now=True, source='frames') cannot "
+                "honour max_files_per_trigger="
+                f"{self.max_files_per_trigger}: the query would stop "
+                "after the first capped micro-batch; pass "
+                "available_now=False (and stop the query once caught up) "
+                "or construct the service without max_files_per_trigger"
+            )
         # re-subscribe parity: the reference's subscribe() begins with
         # `await this.stop()` (:72-74) — a second subscribe on a live
         # slot replaces the stream instead of racing it on the same
@@ -361,8 +373,9 @@ class LogicalReplicationService:
 
         def tracked_sink(batch_df: DataFrame, batch_id: int) -> None:
             # the sink and the ack position share one decode: without the
-            # persist, max_lsn re-parses the whole micro-batch (a second
-            # decode job on the visibility-latency path)
+            # persist, the delivery aggregate below re-parses the whole
+            # micro-batch (a second decode job on the visibility-latency
+            # path)
             batch_df.persist()
             try:
                 try:
@@ -589,10 +602,3 @@ class LogicalReplicationService:
         if self._listener is not None:
             self.spark.streams.removeListener(self._listener)
             self._listener = None
-
-
-def max_lsn(events: DataFrame) -> str | None:
-    """Newest LSN in a (micro-)batch of ChangeEvents — the position a
-    manual acknowledger would commit (``acknowledge(lsn)``, :254-300)."""
-    row = events.agg(F.max("lsn_long").alias("m"), F.max_by("lsn", "lsn_long").alias("s")).first()
-    return None if row is None or row["m"] is None else row["s"]

@@ -17,7 +17,7 @@ eval "$ENVS"
 
 {
   echo "# live-PG conformance transcript — ${LABEL}"
-  echo "# HEAD: $(git rev-parse HEAD)"
+  echo "# HEAD: $(git describe --always --dirty)"
   echo "# server: $(/usr/lib/postgresql/15/bin/postgres --version)"
   python -m pytest tests/test_live_pg.py -m livepg -q -rs 2>&1
   echo "# exit: $?"

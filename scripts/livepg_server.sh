@@ -12,11 +12,13 @@
 set -euo pipefail
 
 PGBIN=${PGBIN:-/usr/lib/postgresql/15/bin}
-PGDATA=${1:-/tmp/pg15_live}
+PGDATA=$(realpath -m "${1:-/tmp/pg15_live}")  # absolute: run_as_pg runs from /
 PORT=${PORT:-54329}
 
+# as root, cd / first: the postgres user cannot enter a root-owned
+# checkout, and su would warn that it cannot change directory
 run_as_pg() {
-  if [ "$(id -u)" = 0 ]; then su postgres -c "$*"; else bash -c "$*"; fi
+  if [ "$(id -u)" = 0 ]; then (cd / && su postgres -c "$*"); else bash -c "$*"; fi
 }
 
 # stop any postmaster still running from a previous invocation BEFORE

@@ -1,18 +1,27 @@
 """The relay loop and the frame-log layout, without a Spark session.
 
 Covers the one relay step (``relay._SlotRelay``) behind ``run_relay`` and
-``run_multi_relay``, and the one segment-listing rule every frame-log
-reader shares (``transport.list_segments``). Run it alone with
+``run_multi_relay``, the one segment-listing rule every frame-log reader
+shares (``transport.list_segments``), the one cutting rule the writer and
+the frames reader share (``transport.block_open_after``) and the
+``last_logged_lsn`` memo. Run it alone with
 ``python -m pytest tests/test_frame_log.py``: nothing here needs Java.
 """
 
 import os
 import time
 
-from test_transport import _FakePgServer, _keepalive, _ListTransport, _xlog
+from test_transport import (
+    _FakePgServer,
+    _keepalive,
+    _ListTransport,
+    _two_phase_frames,
+    _xlog,
+)
 
-from pg_logical_replication_spark.model import lsn_to_long
+from pg_logical_replication_spark.model import long_to_lsn, lsn_to_long
 from pg_logical_replication_spark.relay import run_multi_relay, run_relay
+from pg_logical_replication_spark.sources import pgoutput_format as pf
 from pg_logical_replication_spark.sources.bootstrap import (
     BOOTSTRAP_DONE_MARKER,
 )
@@ -21,8 +30,11 @@ from pg_logical_replication_spark.sources.transport import (
     FrameLogTailTransport,
     FrameLogWriter,
     WalsenderTransport,
+    block_open_after,
+    frame_lsn,
     last_logged_lsn,
     list_segments,
+    split_frames,
     write_frame,
 )
 
@@ -188,3 +200,93 @@ def test_reack_fires_once_per_status_interval(tmp_path):
     # one re-ack per elapsed interval at most; a timer left running
     # after a re-ack would send one per 0.01 s poll instead
     assert 2 <= len(t.statuses) <= elapsed / 0.1
+
+
+def test_writer_never_seals_a_segment_inside_a_block(tmp_path):
+    """Segments rotate only outside 'S'..'E' and 'b'..'P' blocks — also
+    when a resumed writer finds its last segment inside a block — so a
+    reader that decodes each segment on its own sees whole blocks."""
+    d = str(tmp_path / "wal")
+    streamed = [
+        pf.encode_stream_start(900),
+        *[pf.with_stream_xid(900, pf.encode_insert(16401, [("t", str(i))]))
+          for i in range(10)],
+        pf.encode_stream_stop(),
+        pf.encode_stream_commit(900, "0/9000", "0/9008", 0),
+    ]
+    frames = [
+        _xlog(0x8000 + 8 * i, m)
+        for i, m in enumerate(streamed)
+    ] + _two_phase_frames("commit", start=0x9000)
+    FrameLogWriter(d, segment_frames=6).append(frames[:4])
+    # resumes inside the streamed segment: its frame count passes the
+    # cap there, and the writer must still hold the segment open
+    w = FrameLogWriter(d, segment_frames=6)
+    w.append(frames[4:9])
+    w.append(frames[9:])
+
+    names = list_segments(d)
+    assert len(names) > 2  # the cap still rotates outside blocks
+    logged, cuts = [], []
+    for name in names:
+        with open(os.path.join(d, name), "rb") as f:
+            seg, _pos = split_frames(f.read(), 0, None)
+        logged += seg
+        cuts.append(len(logged))
+    assert logged == frames
+    open_, open_at = False, []
+    for frame in logged:
+        open_ = block_open_after(frame, open_)
+        open_at.append(open_)
+    assert [open_at[c - 1] for c in cuts] == [False] * len(cuts)
+
+
+def test_block_edges_take_only_the_exact_pgoutput_shapes():
+    """Payloads of other formats that start with a block tag open or
+    close nothing."""
+    opener = _two_phase_frames("commit")[1]  # 'b'
+    for payload in (
+        b"S", b"E-", b"b" + b"x" * 40, b"PREPARE TRANSACTION 'g1'",
+        b"b" + b"\x00" * 40, b"P" + b"x" * 28 + b"\x00",
+        b"P" + b"x" * 29 + b"g\x00id\x00",
+    ):
+        assert block_open_after(_xlog(0x10, payload), False) is False
+        assert block_open_after(_xlog(0x10, payload), True) is True
+    assert block_open_after(opener, False) is True
+    assert block_open_after(_keepalive(0x10), True) is True
+
+
+def test_last_logged_lsn_rereads_only_the_active_segment(tmp_path, monkeypatch):
+    """Sealed segments' maxima are remembered: after an append to the
+    active segment, only that segment is opened again, and the result
+    still equals a full scan — whose maximum may sit in an earlier
+    segment (a keepalive's walEnd beyond later walStarts)."""
+    d = str(tmp_path / "wal")
+    w = FrameLogWriter(d, segment_frames=3)
+    w.append([_xlog(0x100), _keepalive(0x900)] + [
+        _xlog(0x108 + 8 * i) for i in range(5)
+    ])
+    assert last_logged_lsn(d) == "00000000/00000900"
+
+    def full_scan():
+        return long_to_lsn(max(
+            lsn_to_long(lsn)
+            for lsn in map(frame_lsn, FrameLogTailTransport(d).poll())
+            if lsn
+        ))
+
+    real_open, opened = open, []
+
+    def spy(path, *args, **kwargs):
+        opened.append(os.path.basename(path))
+        return real_open(path, *args, **kwargs)
+
+    for frame, want in ((_xlog(0x140), "00000000/00000900"),
+                        (_xlog(0x1000), "00000000/00001000")):
+        w.append([frame])
+        monkeypatch.setattr("builtins.open", spy)
+        got = last_logged_lsn(d)
+        monkeypatch.undo()
+        assert opened == [list_segments(d)[-1]]
+        opened.clear()
+        assert got == full_scan() == want

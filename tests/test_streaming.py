@@ -1341,3 +1341,19 @@ def test_ping_ack_skipped_for_files_source(spark, log_dirs):
         lambda df, bid: seen.extend(df.collect()),
     )
     assert len(seen) == 1 and seen[0]["table"] == "t"
+
+
+def test_frames_available_now_refuses_a_trigger_cap(spark, tmp_path):
+    """Spark's availableNow trigger stops at the frames source's first
+    capped offset, so a capped service would deliver one micro-batch of
+    the backlog and stop; subscribe refuses the combination by name."""
+    svc = LogicalReplicationService(
+        spark, str(tmp_path / "log"), str(tmp_path / "cp"),
+        max_files_per_trigger=3,
+    )
+    with pytest.raises(ValueError, match="max_files_per_trigger=3") as e:
+        svc.subscribe(
+            "wal2json", "s", lambda _df, _b: None,
+            available_now=True, source="frames",
+        )
+    assert "available_now=False" in str(e.value)

@@ -6,7 +6,10 @@ the per-transaction ground truth.
 Wire model (matches the walsender's): each transaction's body is one or
 more ATOMIC blocks (b..P frame, S..E segment, begin..commit frame);
 blocks of different txns interleave freely, but never nest; every fate
-row comes after its transaction's last body block.
+row comes after its transaction's last body block. A begin..commit
+frame may carry an origin message right after its begin (a change
+replicated from another node), which filter_by_origin attributes to
+that frame.
 """
 
 import random
@@ -14,6 +17,7 @@ import random
 import pytest
 
 from pg_logical_replication_spark.operators.transactions import (
+    filter_by_origin,
     resolve_transactions,
 )
 from pg_logical_replication_spark.sources import pgoutput_format as fmt
@@ -43,6 +47,9 @@ def _wire_and_truth(rng: random.Random):
         gid = f"g{xid}"
         if shape == "v1":
             msgs = [fmt.encode_begin(f"0/{xid:X}", TS_US, xid)]
+            if rng.random() < 0.5:
+                msgs.append(fmt.encode_origin(
+                    f"0/{xid:X}", rng.choice(["node_a", "node_b"])))
             msgs += [fmt.encode_insert(OID, [("t", i)]) for i in ids]
             msgs += [fmt.encode_commit(f"0/{xid:X}", f"0/{xid + 8:X}", TS_US)]
             body_blocks.append(msgs)
@@ -125,10 +132,11 @@ def test_resolve_transactions_random_interleavings(spark, seed):
 
 @pytest.mark.parametrize("seed", range(8))
 def test_partitioned_framing_agrees_with_default(spark, seed):
-    """VERDICT r5 #6: resolve_transactions(partition_col=) must produce
-    the SAME surviving rows as the broadcast/global-lead form on random
-    interleavings, with segment cuts placed adversarially (transactions
-    and even streamed segments may span partition boundaries)."""
+    """VERDICT r5 #6: resolve_transactions(partition_col=) and
+    filter_by_origin(partition_col=) must produce the SAME surviving rows
+    as the broadcast/global-lead form on random interleavings, with
+    segment cuts placed adversarially (transactions and even streamed
+    segments may span partition boundaries)."""
     from pyspark.sql import functions as F
 
     rng = random.Random(1000 + seed)
@@ -161,6 +169,45 @@ def test_partitioned_framing_agrees_with_default(spark, seed):
     out = resolve_transactions(ev, partition_col="seg")
     got = {r["after"]["id"] for r in out.filter("op = 'insert'").collect()}
     assert got == expected, f"seed {seed}: {sorted(got)} != {sorted(expected)}"
+
+    # filter_by_origin over the same cuts: both shapes keep exactly the
+    # inserts a wire-order walk attributes to a kept transaction
+    wire = ev.select("seq", "op", "meta", "after").collect()
+    for opts in ({}, {"filter_origins": ["node_a"], "keep_local": False}):
+        want = _origin_truth(wire, **opts)
+        for part in (None, "seg"):
+            out = filter_by_origin(ev, partition_col=part, **opts)
+            got = {
+                r["after"]["id"]
+                for r in out.filter("op = 'insert'").collect()
+            }
+            assert got == want, (
+                f"seed {seed} {opts} partition_col={part}: "
+                f"{sorted(got)} != {sorted(want)}"
+            )
+
+
+def _origin_truth(rows, filter_origins=None, keep_local=True):
+    """Reference model of filter_by_origin: walk the decoded rows in
+    wire order; every insert belongs to the newest begin before it and
+    carries that frame's origin (None = local)."""
+    kept, origin = set(), None
+    for r in sorted(rows, key=lambda r: r["seq"]):
+        if r["op"] == "begin":
+            origin = None
+        elif r["op"] == "origin":
+            origin = r["meta"]["origin"]
+        elif r["op"] == "insert":
+            if origin is None:
+                keep = keep_local
+            else:
+                keep = (
+                    filter_origins is not None
+                    and origin not in filter_origins
+                )
+            if keep:
+                kept.add(r["after"]["id"])
+    return kept
 
 
 def test_assign_transactions_partitioned_agrees(spark):

@@ -4,6 +4,7 @@ a ping, and commit acknowledges with the +1/32-bit-carry rule
 (reference logical-replication-service.ts:165-171, :254-300)."""
 
 import os
+import re
 import socket
 import struct
 import threading
@@ -265,6 +266,25 @@ def _streamed_log(d, segments, cut=None):
     return frames[len(frames) if cut is None else cut:]
 
 
+def _two_phase_frames(fate, start=0x8000):
+    """R, a two-phase frame (begin_prepare of xid 700, inserts 0-5,
+    prepare), then its ``fate``: 'commit' or 'rollback'."""
+    from pg_logical_replication_spark.sources import pgoutput_format as pf
+
+    oid = 16401
+    lsns = ("0/9000", "0/9008")
+    msgs = [
+        pf.encode_relation(oid, "public", "t", [("id", 20)], key_columns=["id"]),
+        pf.encode_begin_prepare(*lsns, 0, 700, "g700"),
+        *[pf.encode_insert(oid, [("t", str(i))]) for i in range(6)],
+        pf.encode_prepare(*lsns, 0, 700, "g700"),
+        pf.encode_commit_prepared(*lsns, 0, 700, "g700")
+        if fate == "commit"
+        else pf.encode_rollback_prepared(*lsns, 0, 0, 700, "g700"),
+    ]
+    return [_xlog(start + 8 * i, m) for i, m in enumerate(msgs)]
+
+
 def _gated_rows(spark, log, cp, max_frames, until):
     """Run the frames source → pgoutput decode → commit gate and collect
     every delivered row; ``until(rows, query)`` returns True when done."""
@@ -322,6 +342,70 @@ def test_frames_batches_never_end_inside_a_streamed_segment(spark, tmp_path):
     _streamed_log(log, [range(0, 12), range(12, 24)])
     rows = _gated_rows(spark, log, str(tmp_path / "cp"), 5, _inserts_or_error(25))
     assert _committed_ids(rows) == [*range(24), 600]
+
+
+def test_frames_batches_never_end_inside_a_two_phase_frame(spark, tmp_path):
+    """maxFramesPerTrigger=4 inside a 'b'..'P' frame of six changes: the
+    batch takes the frame whole, so every change is stamped with its
+    prepared xid and the gate drops a rolled-back transaction entirely
+    and delivers a committed one entirely."""
+    from pg_logical_replication_spark.sources.datasource import register
+
+    register(spark)
+    for fate, want in (("rollback", []), ("commit", list(range(6)))):
+        log = str(tmp_path / fate / "wal")
+        os.makedirs(log)
+        frames = _two_phase_frames(fate)
+        with open(os.path.join(log, "000001.seg"), "ab") as f:
+            for fr in frames:
+                write_frame(f, fr)
+
+        def consumed(_got, q, n=len(frames)):
+            # done once a finished batch's end offset counts every frame
+            ends = [p.sources[0].endOffset or "" for p in q.recentProgress]
+            return any(re.search(rf"frames\W+{n}\b", e) for e in ends)
+
+        rows = _gated_rows(spark, log, str(tmp_path / fate / "cp"), 4, consumed)
+        assert _committed_ids(rows) == want, fate
+
+
+def test_batch_read_decodes_a_streamed_segment_past_the_rotation_cap(
+    spark, tmp_path
+):
+    """A streamed segment longer than ``segment_frames`` stays in one
+    log segment, so the batch ``pg_cdc`` read, which decodes each
+    segment on its own, decodes every change in its stream context."""
+    from pyspark.sql import functions as F
+
+    from pg_logical_replication_spark.operators.transactions import (
+        resolve_streamed,
+    )
+    from pg_logical_replication_spark.sources import pgoutput_format as pf
+    from pg_logical_replication_spark.sources.datasource import register
+    from pg_logical_replication_spark.sources.pgoutput import decode_pgoutput
+    from pg_logical_replication_spark.sources.transport import FrameLogWriter
+    from pg_logical_replication_spark.sources.wire import demux_copy_stream
+
+    oid = 16401
+    msgs = [
+        pf.encode_relation(oid, "public", "t", [("id", 20)], key_columns=["id"]),
+        pf.encode_stream_start(900),
+        *[pf.with_stream_xid(900, pf.encode_insert(oid, [("t", str(i))]))
+          for i in range(10)],
+        pf.encode_stream_stop(),
+        pf.encode_stream_commit(900, "0/9000", "0/9008", 0),
+    ]
+    log = str(tmp_path / "wal")
+    FrameLogWriter(log, segment_frames=6).append(
+        [_xlog(0x8000 + 8 * i, m) for i, m in enumerate(msgs)]
+    )
+    register(spark)
+    raw = spark.read.format("pg_cdc").option("path", log).load()
+    wire = demux_copy_stream(raw, passthrough=("lsn", "seq")).filter(
+        F.col("msg_type") == "w"
+    ).select("lsn", "seq", F.col("payload").alias("data"))
+    rows = resolve_streamed(decode_pgoutput(wire)).collect()
+    assert _committed_ids(rows) == list(range(10))
 
 
 def test_frames_hold_back_an_unterminated_segment(spark, tmp_path):
